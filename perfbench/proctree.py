@@ -1,17 +1,22 @@
-"""CPU time and resident memory of a process tree, read from /proc.
+"""CPU time and memory of a process tree, read from /proc.
 
 The benchmark's process tree is the driver Python process, the Spark JVM
 it launches and the Python workers the JVM forks. Steal time is not CPU
 time, so `tree_cpu_s` is steadier than wall time on a shared host.
+
+Memory is the tree's proportional set size (PSS): a page shared by k
+processes counts 1/k to each. PySpark's Python workers are forked from one
+daemon and share its pages copy-on-write, so summing RSS would count those
+pages once per live worker and follow how many workers happen to exist.
 """
 
 from __future__ import annotations
 
 import os
 import threading
+import time
 
 _TICK = os.sysconf("SC_CLK_TCK")
-_PAGE = os.sysconf("SC_PAGE_SIZE")
 
 
 def _stat_fields(pid: int) -> list[str] | None:
@@ -60,35 +65,47 @@ def host_steal_ticks() -> tuple[int, int]:
     return ticks[7], sum(ticks)
 
 
-def tree_rss_mb(root: int) -> float:
-    total = 0
-    for pid in descendants(root):
-        try:
-            with open(f"/proc/{pid}/statm") as f:
-                total += int(f.read().split()[1])
-        except OSError:
-            continue
-    return total * _PAGE / 2**20
+def pss_kb(pid: int) -> int:
+    """PSS of one process in KiB; 0 if it has ended."""
+    try:
+        with open(f"/proc/{pid}/smaps_rollup") as f:
+            for line in f:
+                if line.startswith("Pss:"):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return 0
 
 
-class PeakRss:
-    """Samples the tree's RSS on a thread until stopped; keeps the peak
-    since the last `take()`."""
+def tree_pss_mb(root: int) -> float:
+    return sum(pss_kb(pid) for pid in descendants(root)) / 1024
 
-    def __init__(self, root: int, period_s: float = 0.25):
+
+class PeakMem:
+    """Samples the tree's PSS on a thread until stopped; keeps the peak
+    since the last `take()`.
+
+    Reading smaps_rollup of a multi-GB JVM costs tens of milliseconds of
+    kernel time, charged to this process; `cpu_s` accumulates it so the
+    caller can leave the sampler out of the tree's CPU time."""
+
+    def __init__(self, root: int, period_s: float = 0.5):
         self.root = root
         self.period_s = period_s
         self.peak_mb = 0.0
+        self.cpu_s = 0.0
         self._lock = threading.Lock()
         self._stop = threading.Event()
         self._thread = threading.Thread(
-            target=self._run, name="peak-rss", daemon=True
+            target=self._run, name="peak-mem", daemon=True
         )
 
     def _sample(self) -> None:
-        rss = tree_rss_mb(self.root)
+        c = time.thread_time()
+        mb = tree_pss_mb(self.root)
         with self._lock:
-            self.peak_mb = max(self.peak_mb, rss)
+            self.peak_mb = max(self.peak_mb, mb)
+            self.cpu_s += time.thread_time() - c
 
     def _run(self) -> None:
         while True:
@@ -103,7 +120,7 @@ class PeakRss:
             peak, self.peak_mb = self.peak_mb, 0.0
         return peak
 
-    def __enter__(self) -> "PeakRss":
+    def __enter__(self) -> "PeakMem":
         self._thread.start()
         return self
 

@@ -21,11 +21,13 @@ import shutil
 import signal
 import subprocess
 import sys
+import threading
 import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 LIMIT_S = 150  # a run must end within 180 s, clean-up included
 DRIVER_MEM = "4g"  # the box has 15 GiB, shared; shuffle goes to disk
+RESULT_PREFIX = '{"correct"'  # worker.py's last stdout line
 
 
 def program_env(root: str, work: str, cores: int) -> dict[str, str]:
@@ -69,14 +71,19 @@ def group_members(pgid: int) -> list[int]:
                 raw = f.read()
         except OSError:
             continue
-        if int(raw[raw.rindex(")") + 2:].split()[2]) == pgid:
+        state, _, group = raw[raw.rindex(")") + 2:].split()[:3]
+        if int(group) == pgid and state != "Z":  # a zombie has ended
             out.append(int(name))
     return out
 
 
-def stop_group(pgid: int) -> None:
-    """Stop every process the run started and wait until all have ended."""
-    for sig, grace in ((signal.SIGTERM, 10.0), (signal.SIGKILL, 10.0)):
+def stop_group(pgid: int, term_grace: float) -> None:
+    """Stop every process the run started and wait until all have ended:
+    SIGTERM, then SIGKILL after `term_grace` seconds (0: SIGKILL now)."""
+    steps = [(signal.SIGKILL, 10.0)]
+    if term_grace > 0:
+        steps.insert(0, (signal.SIGTERM, term_grace))
+    for sig, grace in steps:
         if not group_members(pgid):
             return
         try:
@@ -120,21 +127,33 @@ def main(argv=None) -> int:
         cmd, cwd=root, env=program_env(root, work, cores),
         stdout=subprocess.PIPE, text=True, start_new_session=True,
     )
+    lines: list[str] = []
+    ended = threading.Event()
+
+    def read() -> None:
+        # the result line is the last thing the run needs; the session's
+        # shutdown after it is not waited for
+        for line in proc.stdout:
+            lines.append(line)
+            if line.startswith(RESULT_PREFIX):
+                break
+        ended.set()
+
+    threading.Thread(target=read, daemon=True).start()
     try:
-        out, _ = proc.communicate(timeout=LIMIT_S)
-    except subprocess.TimeoutExpired:
-        print(f"perfbench: run exceeded {LIMIT_S} s", file=sys.stderr)
-        out = None
+        if not ended.wait(LIMIT_S):
+            print(f"perfbench: run exceeded {LIMIT_S} s", file=sys.stderr)
     finally:
         t = time.monotonic()
-        stop_group(proc.pid)
+        done = bool(lines) and lines[-1].startswith(RESULT_PREFIX)
+        stop_group(proc.pid, term_grace=0.0 if done else 10.0)
         print(f"[perfbench] stopped the run's processes in "
               f"{time.monotonic() - t:.2f} s", file=sys.stderr)
         proc.wait()
         shutil.rmtree(work, ignore_errors=True)
-    if out is None or proc.returncode != 0:
-        if out:
-            sys.stderr.write(out)
+    out = "".join(lines)
+    if not done:
+        sys.stderr.write(out)
         return 1
     sys.stdout.write(out)
     return 0

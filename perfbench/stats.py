@@ -1,7 +1,6 @@
 """Summary statistics shared by the benchmark and its tests.
 
-Every timing is reported as a median with its quartiles and sample count,
-plus the highest percentile that still has at least ten samples beyond it.
+Every timing is reported as a median with its quartiles and sample count.
 Failures are counted against attempts, never dropped.
 """
 
@@ -9,10 +8,6 @@ from __future__ import annotations
 
 import statistics
 from dataclasses import dataclass, field
-
-# candidate percentiles for the tail figure, highest first
-TAIL_PERCENTILES = (99.9, 99.0, 95.0, 90.0, 75.0, 50.0)
-
 
 def quartiles(values: list[float]) -> tuple[float, float, float]:
     """(q1, median, q3) with `statistics.quantiles(values, n=4)`.
@@ -32,27 +27,6 @@ def spread(values: list[float]) -> float:
     """Interquartile distance as a share of the median."""
     q1, med, q3 = quartiles(values)
     return (q3 - q1) / med if med else float("inf")
-
-
-def tail_percentile(
-    values: list[float], min_beyond: int = 10
-) -> tuple[float, float] | None:
-    """(p, value) for the highest p in TAIL_PERCENTILES whose upper tail
-    holds at least `min_beyond` samples, or None if even the median has
-    fewer. The value is the nearest-rank percentile."""
-    n = len(values)
-    ordered = sorted(values)
-    for p in TAIL_PERCENTILES:
-        beyond = n - _nearest_rank(n, p)
-        if beyond >= min_beyond:
-            return p, ordered[_nearest_rank(n, p) - 1]
-    return None
-
-
-def _nearest_rank(n: int, p: float) -> int:
-    """1-based nearest-rank index of percentile p among n samples."""
-    rank = int(-(-p * n // 100))  # ceil(p * n / 100)
-    return min(max(rank, 1), n)
 
 
 def summarize(values: list[float]) -> dict:

@@ -10,7 +10,8 @@ import pytest
 from conftest import BENCH, ROOT
 
 from spans import Tracer, covered
-from stats import Outcomes, quartiles, spread, summarize, tail_percentile
+from proctree import pss_kb, tree_pss_mb
+from stats import Outcomes, quartiles, spread, summarize
 from workloads import SyntheticWeb, gen_corpus, jaccard_groups
 
 
@@ -39,15 +40,32 @@ def test_summarize_counts_samples():
     assert s["n"] == 3 and s["median"] == 2.0
 
 
-def test_tail_percentile_needs_ten_beyond():
-    assert tail_percentile(list(range(5))) is None
-    # 20 samples: the median has 10 beyond it, p75 only 5
-    assert tail_percentile([float(i) for i in range(1, 21)]) == (50.0, 10.0)
-    # 100 samples: p90 has 10 beyond, p95 only 5
-    assert tail_percentile([float(i) for i in range(1, 101)]) == (90.0, 90.0)
-    # 1000 samples: p99 has 10 beyond
-    p, v = tail_percentile([float(i) for i in range(1, 1001)])
-    assert (p, v) == (99.0, 990.0)
+def test_pss_counts_shared_pages_once(tmp_path):
+    """Forked children share the parent's pages: the tree's PSS grows by
+    far less than one parent-sized copy per child, unlike summed RSS."""
+    ballast = bytearray(64 * 2**20)
+    ballast[::4096] = b"x" * len(ballast[::4096])  # touch every page
+    me = os.getpid()
+    alone = tree_pss_mb(me)
+    r, w = os.pipe()
+    kids = []
+    for _ in range(3):
+        pid = os.fork()
+        if pid == 0:  # child: hold the shared pages until the pipe closes
+            os.close(w)
+            os.read(r, 1)
+            os._exit(0)
+        kids.append(pid)
+    os.close(r)
+    try:
+        assert all(pss_kb(pid) > 0 for pid in kids)
+        assert tree_pss_mb(me) < alone + 3 * 32
+    finally:
+        os.close(w)
+        for pid in kids:
+            os.waitpid(pid, 0)
+    assert pss_kb(kids[0]) == 0  # ended
+    del ballast
 
 
 def test_outcomes_error_rate():
@@ -198,4 +216,4 @@ def test_benchmark_json_matches_the_harness():
     assert spec["paths"] == [os.path.basename(BENCH)]
     assert {m["name"]: m["unit"] for m in spec["end_to_end"]} == END_TO_END
     assert {m["name"]: m["unit"] for m in spec["per_layer"]} == PER_LAYER
-    assert {w["name"] for w in spec["workloads"]} <= set(WORKLOADS)
+    assert {w["name"] for w in spec["workloads"]} == set(WORKLOADS)

@@ -2,10 +2,10 @@
 
 `run.py` starts this script with the program's settings in its
 environment; see run.py for the command line. Set-up (session start,
-input generation repeated GEN_REPS times, pre-build and warm-up) is timed
-as `setup_s`. Then batches run in closed loop for `--seconds`: each is
-submitted when the previous one has committed, and each output is
-checked. The last stdout line is the result as one JSON object.
+input generation, pre-build and warm-up) is timed as `setup_s`. Then
+batches run in closed loop for `--seconds`: each is submitted when the
+previous one has committed, and each output is checked. The last stdout
+line is the result as one JSON object.
 """
 
 from __future__ import annotations
@@ -19,12 +19,10 @@ import sys
 import time
 import traceback
 
-from proctree import PeakRss, descendants, host_steal_ticks, tree_cpu_s
+from proctree import PeakMem, descendants, host_steal_ticks, tree_cpu_s
 from spans import StatusStore, Tracer
-from stats import Outcomes, summarize, tail_percentile
+from stats import Outcomes, summarize
 from workloads import WORKLOADS
-
-GEN_REPS = 3
 
 END_TO_END = {
     "items_per_s": "items/s",
@@ -122,6 +120,7 @@ class Run:
         self.work = args.work
         self.outcomes = Outcomes()
         self.n_batch = 0
+        self.mem = None  # the PeakMem sampler while one runs
 
     def setup(self) -> dict:
         from jirlbot_spark.session import get_spark
@@ -133,25 +132,24 @@ class Run:
         self.wl = WORKLOADS[self.args.workload](
             self.spark, self.args.seed, small=self.args.small
         )
-        gen = []
-        for k in range(GEN_REPS):
-            root = os.path.join(self.work, f"gen_{k}")
-            t = time.perf_counter()
-            self.wl.generate(root)
-            gen.append(time.perf_counter() - t)
-            if k:  # the workload now reads gen_k only
-                shutil.rmtree(os.path.join(self.work, f"gen_{k - 1}"))
+        t = time.perf_counter()
+        self.wl.generate(os.path.join(self.work, "gen"))
+        generate_s = time.perf_counter() - t
         t = time.perf_counter()
         self.wl.prebuild(os.path.join(self.work, "prebuild"))
         prebuild_s = time.perf_counter() - t
         parts = {
             "session_s": session_s,
-            "generate_s": statistics.median(gen),
+            "generate_s": generate_s,
             "prebuild_s": prebuild_s,
         }
         log("set-up " + " ".join(f"{k}={v:.2f}" for k, v in parts.items()))
         self.setup_parts = parts
         return parts
+
+    def _cpu(self) -> float:
+        """CPU seconds of the tree, less what the memory sampler spent."""
+        return tree_cpu_s(self.pid) - (self.mem.cpu_s if self.mem else 0.0)
 
     def _batch(self, fn):
         """Run one batch through `fn(b, out)`; check it, count it."""
@@ -159,14 +157,14 @@ class Run:
         b = ids[self.n_batch % len(ids)]
         out = os.path.join(self.work, f"batch_{self.n_batch}")
         self.n_batch += 1
-        c0, t0 = tree_cpu_s(self.pid), time.perf_counter()
+        c0, t0 = self._cpu(), time.perf_counter()
         try:
             res = fn(b, out)
             errors = None
         except Exception as e:  # a failed operation is counted, not fatal
             traceback.print_exc(file=sys.stderr)
             res, errors = None, [f"batch {b}: {type(e).__name__}: {e}"]
-        dt, cpu = time.perf_counter() - t0, tree_cpu_s(self.pid) - c0
+        dt, cpu = time.perf_counter() - t0, self._cpu() - c0
         if errors is None:
             try:
                 errors = self.wl.check(b, res.get("result", res))
@@ -185,7 +183,8 @@ class Run:
         """Closed loop for `seconds`; per-batch samples, median of each."""
         self.samples = {k: [] for k in END_TO_END if k != "setup_s"}
         steal0 = host_steal_ticks()
-        with PeakRss(self.pid) as mem:
+        with PeakMem(self.pid) as mem:
+            self.mem = mem
             mem.take()
             start = time.perf_counter()
             while True:
@@ -194,10 +193,11 @@ class Run:
                 self.samples["cpu_s"].append(cpu)
                 self.samples["batch_s_p50"].append(dt)
                 self.samples["peak_mem_mb"].append(mem.take())
-                log(f"  peak rss {self.samples['peak_mem_mb'][-1]:.0f} MB, "
+                log(f"  peak pss {self.samples['peak_mem_mb'][-1]:.0f} MB, "
                     f"{len(descendants(self.pid))} processes")
                 if time.perf_counter() - start >= seconds:
                     break
+        self.mem = None
         steal1 = host_steal_ticks()
         self.steal = (steal1[0] - steal0[0]) / max(steal1[1] - steal0[1], 1)
         return {k: statistics.median(v) for k, v in self.samples.items()}
@@ -259,9 +259,6 @@ def report(run: Run, setup: dict, metrics: dict, trace: bool) -> None:
             s = summarize(samples[name])
             line += (f"   median of n={s['n']}, q1 {s['q1']:.4f}, "
                      f"q3 {s['q3']:.4f}")
-            tail = tail_percentile(samples[name])
-            if tail:
-                line += f", p{tail[0]:g} {tail[1]:.4f}"
         print(line)
     print(f"  error_rate {run.outcomes.error_rate:.4f} "
           f"({run.outcomes.failed} failed of {run.outcomes.attempted})")

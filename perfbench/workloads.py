@@ -22,6 +22,7 @@ import string
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
@@ -46,6 +47,17 @@ def parquet_mb(path: str) -> float:
     return total / 2**20
 
 
+def write_parquet(frame: pd.DataFrame, path: str, parts: int) -> None:
+    """Write `frame` as `parts` parquet files without a Spark job; Spark
+    then scans it with `parts` tasks, as if it had written it."""
+    os.makedirs(path)
+    table = pa.Table.from_pandas(frame, preserve_index=False)
+    step = max(-(-table.num_rows // parts), 1)
+    for k in range(0, table.num_rows, step):
+        pq.write_table(table.slice(k, step),
+                       os.path.join(path, f"part-{k // step:05d}.parquet"))
+
+
 def noop(df) -> None:
     """Force every column of `df` without writing it anywhere."""
     df.write.format("noop").mode("overwrite").save()
@@ -58,6 +70,7 @@ class Workload:
     def __init__(self, spark, seed: int, small: bool = False):
         self.spark = spark
         self.seed = seed
+        self.cores = int(spark.sparkContext.defaultParallelism)
 
     def generate(self, root: str) -> None:
         """Write the seeded inputs under `root` and compute references."""
@@ -104,81 +117,74 @@ class Frontier(Workload):
         super().__init__(spark, seed, small)
         self.n = 20_000 if small else 200_000
         self.n_plds = 1_000 if small else 20_000  # multiple of 5
-        self.n_batches = 2  # timed batches alternate; one more warms up
+        self.n_batches = 2  # timed batches alternate; input 0 warms up
         self.top_k, self.b_lo = 1_000, 32
         self.b_hi = self.n // 20
-        self.cores = int(spark.sparkContext.defaultParallelism)
 
-    def _gen_frame(self, b: int):
-        lo = self.seed * 10**8 + b * self.n
+    def _gen(self, b: int) -> dict:
+        """Input b as columns: dirty url, id, priority, plus the canonical
+        spelling and the hot/seen flags the references are built from."""
+        rng = np.random.default_rng([self.seed, b, 3])
         n = self.n
-        gid = F.col("id")
-        h = F.xxhash64(gid, F.lit(self.seed))
-        hot = gid % 5 == 0
-        pld = F.when(hot, F.lit(0)).otherwise(gid % self.n_plds)
-        args = (
-            F.pmod(F.shiftright(h, 8), F.lit(13)),
-            pld,
-            gid,
-            F.pmod(F.shiftright(h, 16), F.lit(97)),
-        )
-        dots = F.pmod(F.shiftright(h, 24), F.lit(10)) == 0
-        url = F.when(
-            dots,
-            F.format_string(
-                "HTTP://Sub%d.Site%d.COM:80/a/../page/%d?x=%d#frag", *args
-            ),
-        ).otherwise(
-            F.format_string("HTTP://Sub%d.Site%d.COM:80/page/%d?x=%d#frag",
-                            *args)
-        )
-        canon = F.format_string("http://sub%d.site%d.com/page/%d?x=%d", *args)
-        return self.spark.range(lo, lo + n, numPartitions=self.cores).select(
-            gid.alias("id"),
-            url.alias("url"),
-            (gid % 3).cast("double").alias("priority"),
-            canon.alias("canon"),
-            hot.alias("hot"),
-            (F.pmod(h, F.lit(4)) == 0).alias("seen"),
-        )
+        ids = self.seed * 10**8 + b * n + np.arange(n)
+        hot = ids % 5 == 0
+        pld = np.where(hot, 0, ids % self.n_plds)
+        sub = rng.integers(0, 13, n)
+        x = rng.integers(0, 97, n)
+        dots = rng.random(n) < 0.1
+        seen = rng.random(n) < 0.25
+        url, canon = [], []
+        for i in range(n):
+            tail = f"{sub[i]}.Site{pld[i]}.COM:80/"
+            path = f"page/{ids[i]}?x={x[i]}"
+            url.append(f"HTTP://Sub{tail}{'a/../' if dots[i] else ''}{path}#frag")
+            canon.append(f"http://sub{sub[i]}.site{pld[i]}.com/{path}")
+        return {"id": ids, "url": url, "priority": (ids % 3).astype(float),
+                "canon": canon, "hot": hot, "seen": seen}
 
     def generate(self, root: str) -> None:
-        self.inputs, self.expect = [], []
-        for b in range(self.n_batches + 1):
-            g = self._gen_frame(b)
+        self.inputs, self.expect, self.seen_canon = [], [], []
+        for b in range(self.n_batches):
+            g = self._gen(b)
             path = os.path.join(root, f"urls_{b}")
-            g.select("id", "url", "priority").write.parquet(path)
+            write_parquet(
+                pd.DataFrame({k: g[k] for k in ("id", "url", "priority")}),
+                path, self.cores,
+            )
             self.inputs.append(path)
-            row = g.agg(
-                F.sum(F.col("seen").cast("int")).alias("seen"),
-                F.sum((F.col("hot") & ~F.col("seen")).cast("int")).alias("hot"),
-            ).first()
-            fresh = self.n - row["seen"]
+            seen, hot = g["seen"], g["hot"]
+            fresh = self.n - int(seen.sum())
+            hot_fresh = int((hot & ~seen).sum())
             self.expect.append({
                 "fresh": fresh,
-                "admitted": fresh - row["hot"] + min(row["hot"], self.b_hi),
+                "admitted": fresh - hot_fresh + min(hot_fresh, self.b_hi),
             })
+            self.seen_canon += [c for c, s in zip(g["canon"], seen) if s]
 
     def prebuild(self, root: str) -> None:
-        from jirlbot_spark.functions.prepare import prepare_urls_fused
+        from jirlbot_spark.functions.prepare import (
+            PREPARED_FIELDS,
+            prepare_batch_arrow,
+        )
 
-        seen_urls = None
-        for b in range(self.n_batches + 1):
-            part = self._gen_frame(b).filter("seen").select(
-                F.col("canon").alias("url")
-            )
-            seen_urls = part if seen_urls is None else seen_urls.unionByName(part)
         # url_seen is keyed by the engine's hash of the CLEAN spelling; the
-        # batch arrives dirty, so a canonicalization slip shows as fresh
-        keys = prepare_urls_fused(seen_urls, "url").select(
-            "url_hash",
-            F.pmod("url_hash", F.lit(N_BUCKETS)).cast("int").alias("bucket"),
-        )
+        # batch arrives dirty, so a canonicalization slip shows as fresh.
+        # The keys come from the engine's own Arrow kernel, called here
+        # in-process, so set-up runs no Spark job for them.
+        schema = pa.schema([
+            pa.field(f.name, pa.int64() if f.dataType.typeName() == "long"
+                     else pa.string())
+            for f in PREPARED_FIELDS
+        ])
+        rb = pa.RecordBatch.from_arrays([pa.array(self.seen_canon)], ["url"])
+        keys = prepare_batch_arrow(rb, "url", schema).column("url_hash")
+        keys = keys.to_numpy()
         self.seen_path = os.path.join(root, "url_seen")
-        keys.repartition(F.col("bucket")).write.partitionBy("bucket").parquet(
-            self.seen_path
-        )
-        _warm_up(self, root, self.n_batches)
+        bucket = keys % N_BUCKETS  # pmod: numpy's % is non-negative here
+        for k in range(N_BUCKETS):
+            write_parquet(pd.DataFrame({"url_hash": keys[bucket == k]}),
+                          os.path.join(self.seen_path, f"bucket={k}"), 1)
+        _warm_up(self, root, 0)
 
     def batches(self) -> list[int]:
         return list(range(self.n_batches))
@@ -260,24 +266,27 @@ class Frontier(Workload):
 
         inp = self.spark.read.parquet(self.inputs[b])
         m: dict[str, float] = {}
+        # each forced step adds one stage to the one before it: scan, then
+        # scan + boundary, then scan + boundary + kernel, then + write; a
+        # layer's time is its step minus the step before
         with tracer.span("input.scan") as s:
             noop(inp)
-        m["input.scan_s"] = s.duration
+        scan_s = m["input.scan_s"] = s.duration
         with tracer.span("prepare.arrow") as s:
             cols = inp.select("url", "id", "priority")
             noop(cols.mapInArrow(lambda it: it, schema=cols.schema))
-        m["prepare.arrow_s"] = s.duration
+        arrow_s = s.duration
+        m["prepare.arrow_s"] = arrow_s - scan_s
         with tracer.span("prepare.kernel") as s:
             noop(prepare_urls_fused(inp, "url", None, keep=("id", "priority")))
-        m["prepare.kernel_s"] = s.duration - m["prepare.arrow_s"]
+        kernel_s = s.duration
+        m["prepare.kernel_s"] = kernel_s - arrow_s
         m["prepare.cpu_s"] = s.counts["cpu_s"]
         m["prepare.gc_s"] = s.spark["gc_s"]
         prep_path = os.path.join(out, "prepared")
         with tracer.span("prepare.write") as s:
             prepared = self._persist(self._prepare(b), prep_path)
-        m["storage.write_s"] = s.duration - (
-            m["prepare.kernel_s"] + m["prepare.arrow_s"]
-        )
+        m["storage.write_s"] = s.duration - kernel_s
         m["storage.write_mb"] = parquet_mb(prep_path)
         m["prepare.rows_in"] = self.n
         m["prepare.valid_ratio"] = parquet_rows(prep_path) / self.n
@@ -425,12 +434,10 @@ class CrawlLoopWorkload(Workload):
         seeds = web.seeds(self.SEED_PAGES)
         self.expect = web.expected_batches(seeds, self.TIMED)
         links_path = os.path.join(root, "links")
-        spark.createDataFrame(web.links).write.parquet(links_path)
+        write_parquet(web.links, links_path, self.cores)
         self.links = spark.read.parquet(links_path)
         pages_path = os.path.join(root, "pages")
-        spark.createDataFrame(gen_pages(self.seed, self.N_IMAGES)).write.parquet(
-            pages_path
-        )
+        write_parquet(gen_pages(self.seed, self.N_IMAGES), pages_path, self.cores)
         self.pages = spark.read.parquet(pages_path)
         hosts = pd.DataFrame({"host": [f"site{s}.com" for s in range(self.n_sites)]})
         hosts["disallow"] = [
@@ -706,7 +713,7 @@ class CurateText(Workload):
 
     def __init__(self, spark, seed, small=False):
         super().__init__(spark, seed, small)
-        self.n = 200 if small else 2_000
+        self.n = 200 if small else 600
         self.n_batches = 2  # timed batches alternate; one more warms up
 
     def generate(self, root: str) -> None:
@@ -714,7 +721,7 @@ class CurateText(Workload):
         for b in range(self.n_batches + 1):
             docs = gen_corpus(self.seed, b, self.n if b < self.n_batches else 200)
             path = os.path.join(root, f"docs_{b}")
-            self.spark.createDataFrame(docs).write.parquet(path)
+            write_parquet(docs, path, self.cores)
             self.inputs.append(path)
             texts = dict(zip(docs["doc_id"].tolist(), docs["text"].tolist()))
             group = jaccard_groups(texts)

@@ -16,6 +16,7 @@ the span dumps of traced runs (.bench_work/spans/).
 from __future__ import annotations
 
 import argparse
+import ctypes
 import os
 import shutil
 import signal
@@ -24,7 +25,10 @@ import sys
 import threading
 import time
 
+from proctree import descendants
+
 HERE = os.path.dirname(os.path.abspath(__file__))
+PR_SET_CHILD_SUBREAPER = 36  # <linux/prctl.h>
 LIMIT_S = 150  # a run must end within 180 s, clean-up included
 DRIVER_MEM = "4g"  # the box has 15 GiB, shared; shuffle goes to disk
 RESULT_PREFIX = '{"correct"'  # worker.py's last stdout line
@@ -61,38 +65,70 @@ def program_env(root: str, work: str, cores: int) -> dict[str, str]:
     return env
 
 
-def group_members(pgid: int) -> list[int]:
-    out = []
+def _prctl_subreaper() -> None:
+    """Make this process the reaper of every orphan below it, so that a
+    process whose parent dies (a Python worker of a killed JVM) is
+    re-parented here and stays findable as a descendant."""
+    try:
+        libc = ctypes.CDLL(None, use_errno=True)
+        libc.prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+    except (OSError, AttributeError):
+        pass  # the session sweep below still finds them
+
+
+def run_members(sid: int) -> list[int]:
+    """Every process the run started, zombies included: the descendants of
+    this process and every process of the run's session. PySpark's worker
+    daemon leaves the run's process group (setpgid), so a group kill would
+    miss it and the workers it forks."""
+    me = os.getpid()
+    out = set(descendants(me)) - {me}
     for name in os.listdir("/proc"):
-        if not name.isdigit():
-            continue
+        if name.isdigit():
+            try:
+                if os.getsid(int(name)) == sid:
+                    out.add(int(name))
+            except OSError:  # it ended between listing and asking
+                pass
+    return sorted(out)
+
+
+def reap() -> None:
+    """Collect the exit status of every ended child, orphans included."""
+    while True:
         try:
-            with open(f"/proc/{name}/stat") as f:
-                raw = f.read()
-        except OSError:
-            continue
-        state, _, group = raw[raw.rindex(")") + 2:].split()[:3]
-        if int(group) == pgid and state != "Z":  # a zombie has ended
-            out.append(int(name))
-    return out
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid == 0:
+            return
 
 
-def stop_group(pgid: int, term_grace: float) -> None:
-    """Stop every process the run started and wait until all have ended:
-    SIGTERM, then SIGKILL after `term_grace` seconds (0: SIGKILL now)."""
-    steps = [(signal.SIGKILL, 10.0)]
+def stop_run(sid: int, term_grace: float) -> list[int]:
+    """Stop every process the run started and wait until each has ended
+    and been reaped: SIGTERM, then SIGKILL after `term_grace` seconds
+    (0: SIGKILL now). Returns the processes still there at the end."""
+    steps = [(signal.SIGKILL, 20.0)]
     if term_grace > 0:
         steps.insert(0, (signal.SIGTERM, term_grace))
     for sig, grace in steps:
-        if not group_members(pgid):
-            return
-        try:
-            os.killpg(pgid, sig)
-        except ProcessLookupError:
-            return
         deadline = time.monotonic() + grace
-        while group_members(pgid) and time.monotonic() < deadline:
-            time.sleep(0.1)
+        sent: set[int] = set()
+        while True:
+            reap()
+            left = run_members(sid)
+            if not left or time.monotonic() >= deadline:
+                break
+            for pid in set(left) - sent:  # new ones too, e.g. a late fork
+                try:
+                    os.kill(pid, sig)
+                except ProcessLookupError:
+                    pass
+                sent.add(pid)
+            time.sleep(0.05)
+        if not left:
+            return []
+    return left
 
 
 def main(argv=None) -> int:
@@ -123,6 +159,9 @@ def main(argv=None) -> int:
         "--seconds", str(args.seconds), "--trace", str(args.trace),
         "--work", work,
     ] + (["--small"] if args.small else [])
+    _prctl_subreaper()
+    # the driver of a run may stop it with SIGTERM: clean up as on exit
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     proc = subprocess.Popen(
         cmd, cwd=root, env=program_env(root, work, cores),
         stdout=subprocess.PIPE, text=True, start_new_session=True,
@@ -146,10 +185,13 @@ def main(argv=None) -> int:
     finally:
         t = time.monotonic()
         done = bool(lines) and lines[-1].startswith(RESULT_PREFIX)
-        stop_group(proc.pid, term_grace=0.0 if done else 10.0)
+        left = stop_run(proc.pid, term_grace=0.0 if done else 10.0)
+        proc.wait()
         print(f"[perfbench] stopped the run's processes in "
               f"{time.monotonic() - t:.2f} s", file=sys.stderr)
-        proc.wait()
+        if left:
+            print(f"perfbench: processes {left} did not end", file=sys.stderr)
+            done = False
         shutil.rmtree(work, ignore_errors=True)
     out = "".join(lines)
     if not done:

@@ -5,12 +5,16 @@ import json
 import os
 import random
 import statistics
+import subprocess
+import sys
+import time
 
 import pytest
 from conftest import BENCH, ROOT
 
 from spans import Tracer, covered
 from proctree import pss_kb, tree_pss_mb
+from run import _prctl_subreaper, run_members, stop_run
 from stats import Outcomes, quartiles, spread, summarize
 from workloads import SyntheticWeb, gen_corpus, jaccard_groups
 
@@ -66,6 +70,27 @@ def test_pss_counts_shared_pages_once(tmp_path):
             os.waitpid(pid, 0)
     assert pss_kb(kids[0]) == 0  # ended
     del ballast
+
+
+def test_stop_run_reaches_a_process_that_left_the_group():
+    # as PySpark's worker daemon does: a grandchild moves to a process
+    # group of its own, then its parent is killed and it is orphaned
+    _prctl_subreaper()
+    leaver = ("import os, time; os.setpgid(0, 0); print(os.getpid(), "
+              "flush=True); time.sleep(60)")
+    proc = subprocess.Popen(
+        ["sh", "-c", f'{sys.executable} -c "{leaver}" & wait'],
+        stdout=subprocess.PIPE, text=True, start_new_session=True,
+    )
+    grandchild = int(proc.stdout.readline())
+    assert os.getpgid(grandchild) != proc.pid
+    assert grandchild in run_members(proc.pid)
+    t = time.monotonic()
+    assert stop_run(proc.pid, term_grace=0.0) == []
+    assert time.monotonic() - t < 5
+    proc.wait()
+    assert run_members(proc.pid) == []
+    assert not os.path.exists(f"/proc/{grandchild}")  # reaped, not a zombie
 
 
 def test_outcomes_error_rate():

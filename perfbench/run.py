@@ -31,6 +31,10 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 PR_SET_CHILD_SUBREAPER = 36  # <linux/prctl.h>
 LIMIT_S = 150  # a run must end within 180 s, clean-up included
 DRIVER_MEM = "4g"  # the box has 15 GiB, shared; shuffle goes to disk
+# Initial heap: it holds what every workload needs, so G1 does not grow the
+# heap in reaction to its GC-time share, which follows the host's CPU speed
+# and made the JVM's resident size, and so peak_mem_mb, differ run to run.
+INITIAL_HEAP = "2g"
 RESULT_PREFIX = '{"correct"'  # worker.py's last stdout line
 
 
@@ -41,7 +45,8 @@ def program_env(root: str, work: str, cores: int) -> dict[str, str]:
     conf = {
         "spark.local.dir": os.path.join(work, "local"),
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
+        "spark.driver.extraJavaOptions":
+            f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -Xms{INITIAL_HEAP}",
         "spark.ui.showConsoleProgress": "false",
         # the traced run reads every job back from the status store
         "spark.ui.retainedJobs": "100000",
@@ -70,10 +75,12 @@ def _prctl_subreaper() -> None:
     process whose parent dies (a Python worker of a killed JVM) is
     re-parented here and stays findable as a descendant."""
     try:
-        libc = ctypes.CDLL(None, use_errno=True)
-        libc.prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+        prctl = ctypes.CDLL(None, use_errno=True).prctl
     except (OSError, AttributeError):
-        pass  # the session sweep below still finds them
+        return  # the session sweep in run_members still finds them
+    prctl.argtypes = [ctypes.c_int] + [ctypes.c_ulong] * 4
+    prctl.restype = ctypes.c_int
+    prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
 
 
 def run_members(sid: int) -> list[int]:

@@ -16,7 +16,13 @@ from spans import Tracer, covered
 from proctree import pss_kb, tree_pss_mb
 from run import _prctl_subreaper, run_members, stop_run
 from stats import Outcomes, quartiles, spread, summarize
-from workloads import SyntheticWeb, gen_corpus, jaccard_groups
+from workloads import (
+    BOILERPLATE,
+    SyntheticWeb,
+    curate_reference,
+    gen_corpus,
+    jaccard_groups,
+)
 
 
 def test_quartiles_match_statistics_quantiles():
@@ -203,6 +209,21 @@ def test_corpus_near_duplicates_are_far_from_the_threshold():
             src = d - 3 if d % 7 == 0 else d - 1
             assert _jaccard(sh[d], sh[src]) >= 0.95
             assert groups[d] == groups[src]
+
+
+def test_curate_reference_keeps_the_first_boilerplate_line():
+    # line dedup keeps a repeated line in the lowest doc id that has it,
+    # so there 45 words + the 5-word boilerplate pass a 50-word gate
+    rng = random.Random(3)
+
+    def doc(n_words):
+        words = [f"w{rng.randrange(10**9)}" for _ in range(n_words)]
+        return " ".join(words) + "\n" + BOILERPLATE
+
+    texts = {10: doc(45), 11: doc(45), 12: doc(50)}
+    ref = curate_reference(texts, min_words=50)
+    assert ref["survivors"] == {10, 11, 12}
+    assert ref["kept"] == {10, 12}
 
 
 def test_synthetic_web_reference():

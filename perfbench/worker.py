@@ -195,7 +195,10 @@ class Run:
                 self.samples["peak_mem_mb"].append(mem.take())
                 log(f"  peak pss {self.samples['peak_mem_mb'][-1]:.0f} MB, "
                     f"{len(descendants(self.pid))} processes")
-                if time.perf_counter() - start >= seconds:
+                # whole passes over the inputs, so every run's median
+                # weighs each input alike
+                if (time.perf_counter() - start >= seconds
+                        and self.n_batch % len(self.wl.batches()) == 0):
                     break
         self.mem = None
         steal1 = host_steal_ticks()

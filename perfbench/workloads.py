@@ -704,6 +704,29 @@ def jaccard_groups(texts: dict[int, str], k: int = 3, t: float = 0.8) -> dict[in
     return {d: find(d) for d in sets}
 
 
+def curate_reference(texts: dict[int, str], min_words: int) -> dict:
+    """Expected survivors, kept docs and scrubbed emails of one batch.
+
+    Survivors are the exact-Jaccard group minima. Their lines are unique
+    but for the boilerplate line, which line dedup removes from every
+    survivor but the first (min doc id) that carries it; after that the
+    Gopher word-count gate alone decides curation."""
+    group = jaccard_groups(texts)
+    survivors = {d for d, g in group.items() if d == g}
+    first_bp = min((d for d in survivors
+                    if BOILERPLATE in texts[d].split("\n")), default=None)
+    kept = {
+        d for d in survivors
+        if sum(len(ln.split()) for ln in texts[d].split("\n")
+               if ln != BOILERPLATE or d == first_bp) >= min_words
+    }
+    return {
+        "survivors": survivors,
+        "kept": kept,
+        "emails": sum("@example.com" in texts[d] for d in kept),
+    }
+
+
 class CurateText(Workload):
     """MinHash near-dup groups, then the curation plan on the survivors."""
 
@@ -724,20 +747,7 @@ class CurateText(Workload):
             write_parquet(docs, path, self.cores)
             self.inputs.append(path)
             texts = dict(zip(docs["doc_id"].tolist(), docs["text"].tolist()))
-            group = jaccard_groups(texts)
-            survivors = {d for d, g in group.items() if d == g}
-            # survivors' lines are unique but for the boilerplate line,
-            # so the Gopher word-count gate alone decides curation
-            kept = {
-                d for d in survivors
-                if sum(len(ln.split()) for ln in texts[d].split("\n")
-                       if ln != BOILERPLATE) >= self.MIN_WORDS
-            }
-            self.expect.append({
-                "survivors": survivors,
-                "kept": kept,
-                "emails": sum("@example.com" in texts[d] for d in kept),
-            })
+            self.expect.append(curate_reference(texts, self.MIN_WORDS))
 
     def prebuild(self, root: str) -> None:
         _warm_up(self, root, self.n_batches)

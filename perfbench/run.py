@@ -167,7 +167,7 @@ def main(argv=None) -> int:
         "--work", work,
     ] + (["--small"] if args.small else [])
     _prctl_subreaper()
-    # the driver of a run may stop it with SIGTERM: clean up as on exit
+    # a caller that stops the run with SIGTERM gets the same clean-up
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     proc = subprocess.Popen(
         cmd, cwd=root, env=program_env(root, work, cores),

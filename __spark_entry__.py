@@ -62,7 +62,7 @@ def q_seed_scan(spark, sf):
 
 
 def q_canonicalize(spark, sf):
-    from jirlbot_spark.functions.urls import canonicalize_udf
+    from jirlbot_spark.functions.urls_arrow import canonicalize_udf
 
     o = _t(spark, sf, "orders")
     dirty = F.format_string(
@@ -77,7 +77,7 @@ def q_canonicalize(spark, sf):
 
 
 def q_pld_extract(spark, sf):
-    from jirlbot_spark.functions.urls import pld_udf
+    from jirlbot_spark.functions.urls_arrow import pld_udf
 
     c = _t(spark, sf, "customer")
     host = F.format_string(
@@ -92,9 +92,9 @@ def q_pld_extract(spark, sf):
 
 
 def q_url_hash(spark, sf):
-    """The REAL frontier key — murmur3_x64_128[0:64] via the vectorized
-    numpy kernel (functions/hashing.murmur3_64_from the Arrow batch path)
-    over a deterministic URL corpus whose lengths sweep every mod-16
+    """The REAL frontier key — murmur3_x64_128[0:64] via url_hash_col, an
+    arrow_udf over functions/hashing.murmur3_64_from_arrow (the kernel the
+    fused prepare pass hashes with) over a deterministic URL corpus whose lengths sweep every mod-16
     residue. The golden oracle (golden_url_hash) computes the same hashes
     with the INDEPENDENT pure-Python scalar reference
     (tests/scalar_murmur3.py, written from Appleby's public-domain
@@ -270,11 +270,13 @@ def q_sitemap_parse(spark, sf):
 def q_redirect_resolve(spark, sf):
     """3xx Location routing: route_redirects filters the redirect family
     and the target resolves RFC-3986-style against the redirecting page
-    (canonicalize base_col path — the same kernel the crawl loop uses).
+    (canonicalize_udf with a base column: urls_arrow.canonicalize_chunk,
+    the resolve + canonicalize kernel prepare_urls_fused runs for links in
+    the crawl loop).
     Oracle = INDEPENDENT pure-SQL merge (DuckDB CASE over the same
     VALUES; fixture rows are canonical-clean so SQL resolution is exact;
     messy inputs are covered by the urljoin cross-check in tests/)."""
-    from jirlbot_spark.functions.urls import canonicalize_udf
+    from jirlbot_spark.functions.urls_arrow import canonicalize_udf
     from jirlbot_spark.operators.fetch import route_redirects
     from jirlbot_spark.sources.fixtures import redirect_scenario
 

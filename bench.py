@@ -260,10 +260,10 @@ def run_frontier_pipeline(
         .agg(F.count("*").alias("indegree"))
         .localCheckpoint(eager=True)
     )
-    # the SHIPPED variant (the loop + driver key run star_budgets_scalable;
-    # the all-PLD single-window star_budgets exists only as the
-    # property-test reference) — r4 verdict: the headline must measure
-    # the path the engine actually ships
+    # the SHIPPED operator (the loop + driver key run star_budgets_scalable;
+    # the all-PLD single-window formulation lives only in
+    # tests/star_reference.py as its property-test reference) — the
+    # headline must measure the path the engine actually ships
     budgets = star_budgets_scalable(
         deg, top_k=10_000, b_hi=10_000, b_lo=10
     ).select("pld_hash", "budget")

@@ -4,10 +4,11 @@ JVM-side xxhash64 helpers.
 The north rule (BASELINE.json:6,14) pins "canonicalized murmur3 URL hashes"
 for the DRUM-analog membership layer, so the frontier key is the first 64
 bits of MurmurHash3_x64_128 (little-endian, as in Austin Appleby's public
-reference algorithm), computed inside an Arrow-batched pandas UDF over a
-numpy block loop — vectorized across rows, looping only over the (bounded)
-number of 16-byte blocks. A pure-Python scalar implementation of the same
-public algorithm lives in tests as the bit-exactness oracle.
+reference algorithm). murmur3_64_from_arrow computes it straight off an
+Arrow string array's UTF-8 buffer — vectorized across rows, looping only
+over the (bounded) number of 16-byte blocks — for both the fused prepare
+pass and the url_hash_col arrow_udf. A pure-Python scalar implementation
+of the same public algorithm lives in tests as the bit-exactness oracle.
 
 For non-pinned engine-internal keys (bucket ids, salts) we use Spark's
 built-in `xxhash64` — JVM-side, whole-stage-codegen'd, no Python transfer.
@@ -16,7 +17,8 @@ built-in `xxhash64` — JVM-side, whole-stage-codegen'd, no Python transfer.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
@@ -161,24 +163,21 @@ def murmur3_64_from_arrow(arr, seed: int = 0) -> np.ndarray:
     return h1.view(np.int64)
 
 
-def murmur3_64_series(s: pd.Series, seed: int = 0) -> pd.Series:
-    """First 64 bits of murmur3_x64_128 of each UTF-8 string, as signed i64."""
-    vals = s.fillna("").astype(str)
-    data = [v.encode("utf-8") for v in vals]
-    h1, _ = murmur3_x64_128_batch(data, seed=seed)
-    out = pd.Series(h1.view(np.int64), index=s.index, dtype="Int64")
-    return out.mask(s.isna())
-
-
-@F.pandas_udf(LongType())
-def murmur3_64_udf(s: pd.Series) -> pd.Series:
-    return murmur3_64_series(s)
+@F.arrow_udf(LongType())
+def _url_hash_udf(urls: pa.Array) -> pa.Array:
+    # the kernel hashes null as "" — re-apply the validity mask
+    return pa.array(
+        murmur3_64_from_arrow(urls),
+        pa.int64(),
+        mask=pc.is_null(urls).to_numpy(zero_copy_only=False),
+    )
 
 
 def url_hash_col(url_col: str | Column) -> Column:
-    """Pinned frontier key: murmur3_x64_128[0:64] of the canonical URL."""
+    """Pinned frontier key: murmur3_x64_128[0:64] of the canonical URL
+    (null stays null)."""
     c = F.col(url_col) if isinstance(url_col, str) else url_col
-    return murmur3_64_udf(c)
+    return _url_hash_udf(c)
 
 
 def fast_hash_col(col: str | Column) -> Column:

@@ -1,42 +1,27 @@
 """Fused URL-preparation kernel: canonicalize + host + PLD + murmur3 keys
 in ONE Arrow pass.
 
-Chaining separate pandas UDFs costs one JVM<->Python Arrow round trip per
+Chaining separate column UDFs costs one JVM<->Python Arrow round trip per
 UDF (Spark plans each as its own Python runner). The frontier hot path does
 five of them per URL; fusing into a single pass cut the prepare phase ~4x
 in bench.py.
 
-Physical path: mapInArrow over pyarrow compute kernels (urls_arrow) —
+Physical path: mapInArrow over the pyarrow compute kernels in urls_arrow —
 strings never materialize as Python objects, regex runs in re2, murmur3
-reads the Arrow UTF-8 buffer directly. ~5-10x less CPU and DRAM traffic
-per URL than the object-dtype pandas path, which is what keeps the kernel
-scaling when every core is busy (north rule's efficiency criterion).
-Relative-reference resolution (base_col given — the link-extraction path)
-runs in the same Arrow pass via urls_arrow.resolve_chunk.
-
-The original mapInPandas implementation stays as prepare_urls_pandas —
-the semantic reference the Arrow path is equivalence-tested against
-(tests/test_urls.py, tests/test_arrow_kernels.py).
+reads the Arrow UTF-8 buffer directly. Relative-reference resolution
+(base_col given — the link-extraction path) runs in the same Arrow pass
+via urls_arrow.resolve_chunk. The pandas oracle these rows are
+equivalence-tested against lives in tests/urls_reference.py.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-from jirlbot_spark.functions.hashing import murmur3_64_series
-from jirlbot_spark.functions.urls import (
-    canonicalize_series,
-    host_of_series,
-    pld_series,
 )
 
 PREPARED_FIELDS = [
@@ -47,35 +32,6 @@ PREPARED_FIELDS = [
     StructField("pld", StringType()),
     StructField("pld_hash", LongType()),
 ]
-
-
-def prepare_frame(
-    pdf: pd.DataFrame, url_col: str, base_col: str | None
-) -> pd.DataFrame:
-    """Pandas-level kernel: one batch in, prepared batch out (invalid URLs
-    dropped). Keeps every input column except url/base."""
-    bases = pdf[base_col] if base_col else None
-    canon = canonicalize_series(pdf[url_col], bases)
-    keep = pdf.drop(
-        columns=[c for c in (url_col, base_col) if c]
-    )
-    ok = canon.notna()
-    canon = canon[ok]
-    keep = keep[ok]
-    host = host_of_series(canon)
-    pld = pld_series(host)
-    out = pd.DataFrame(
-        {
-            "url": canon.astype("object"),
-            "url_hash": murmur3_64_series(canon),
-            "host": host.astype("object"),
-            "host_hash": murmur3_64_series(host),
-            "pld": pld.astype("object"),
-            "pld_hash": murmur3_64_series(pld),
-        },
-        index=canon.index,
-    )
-    return pd.concat([out, keep], axis=1)
 
 
 def prepare_batch_arrow(rb, url_col: str, out_schema, base_col=None):
@@ -153,23 +109,3 @@ def prepare_urls_fused(
 
     return src.mapInArrow(run_arrow, schema=schema)
 
-
-def prepare_urls_pandas(
-    df: DataFrame,
-    url_col: str = "url",
-    base_col: str | None = None,
-    keep: tuple[str, ...] = (),
-) -> DataFrame:
-    """mapInPandas variant of prepare_urls_fused (the original reference
-    path; kept for equivalence testing and as a fallback surface)."""
-    in_cols = [url_col] + ([base_col] if base_col else []) + list(keep)
-    src = df.select(*in_cols)
-    keep_fields = [f for f in src.schema.fields if f.name in keep]
-    schema = StructType(PREPARED_FIELDS + keep_fields)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield prepare_frame(pdf, url_col, base_col)
-
-    return src.mapInPandas(run, schema=schema)

@@ -11,15 +11,16 @@ embedded subset; this module replaces it with the full ~9.5k-rule list and
 the complete PSL match algorithm (exact rules, leftmost ``*.`` wildcards,
 ``!`` exceptions, the implicit ``*`` default).
 
-Parsed once per process into three frozensets consumed by both the pandas
-kernel (urls.pld_series) and the Arrow kernel (urls_arrow.pld_chunk):
+Parsed once per process into three frozensets consumed by the Arrow
+kernel (urls_arrow.pld_chunk) and its pandas test oracle
+(tests/urls_reference.py):
 
   EXACT             — rule strings, e.g. "com", "co.uk", "github.io"
   WILDCARD_PARENTS  — parents of ``*.x`` rules, e.g. "ck" for "*.ck"
   EXCEPTIONS        — ``!rule`` strings minus the bang, e.g. "www.ck"
 
 Unicode rules are stored in BOTH their punycode form (hosts arrive
-punycoded from canonicalize — urls.py IDN step) and their raw lowercase
+punycoded from canonicalize — the urls_arrow IDN step) and their raw lowercase
 form (defensive: a caller may pass an un-IDNA'd host straight to pld).
 Python's "idna" codec is IDNA2003 — the same codec canonicalize uses for
 hosts, so the two sides agree even where IDNA2003 and UTS-46 differ.
@@ -36,7 +37,7 @@ import functools
 import importlib.resources
 
 # Highest label count across all rules (incl. wildcard parents + 1).
-# Asserted against the parsed data in load_psl(); kernels size their
+# Asserted against the parsed data in load_psl(); pld_chunk sizes its
 # suffix-extraction windows from this.
 MAX_RULE_LABELS = 5
 

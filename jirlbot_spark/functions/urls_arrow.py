@@ -1,20 +1,41 @@
-"""URL canonicalization + PLD extraction on pyarrow compute kernels.
+"""URL canonicalization + pay-level-domain extraction on pyarrow compute
+kernels — the one URL kernel the package ships.
 
-Semantics are IDENTICAL to jirlbot_spark.functions.urls (the pandas
-reference implementation, whose contract is pinned by the golden table in
-tests/test_urls.py) — equivalence is fuzz-tested in
-tests/test_arrow_kernels.py. The difference is purely physical: every pass
-here runs in Arrow C++ (re2 regex, contiguous UTF-8 buffers, no Python
-string objects), which measures ~5-10x faster per core than the
-object-dtype pandas path and — more importantly for the north rule's
-scaling criterion — moves ~10x fewer bytes through DRAM, so it keeps
-scaling when all cores are busy.
+Semantics modeled on IRLbot's URL handling (checkAndTransformURL /
+getPLDofURL in the reference's IRLbotUtil; reference tree was empty at build
+time — SURVEY.md §0 — so the contract is pinned by the IRLbot paper and the
+golden table in tests/test_urls.py):
 
-Both the no-base fast path and full relative-reference resolution run in
-Arrow (resolve_chunk below; prepare.py routes base_col through it). The
-only per-row Python is the idna fallback for the rare non-ASCII hosts.
-Any behavioral divergence from the pandas reference implementation is a
-correctness bug (fuzz-tested, incl. control chars / %-escapes / IDN).
+  canonicalize(url, base):
+    - strip ASCII tab/newline/CR anywhere in url and base first (the
+      WHATWG URL rule; also the one char where re2's '$'/'.' semantics
+      diverge from Python re, which keeps this kernel bit-equivalent to
+      the pandas oracle in tests/urls_reference.py on dirty link data)
+    - resolve relative references against base (scheme-relative, absolute
+      path, relative path, query-only, fragment-only, empty reference)
+    - strip the fragment
+    - percent-encoding normalization (RFC 3986 §6.2.2): uppercase %XX
+      hex, decode unreserved escapes (ALPHA / DIGIT / - . _ ~) — done
+      BEFORE dot-segment removal so a decoded %2E participates in it
+    - lowercase scheme and host; path/query case preserved
+    - IDN: non-ASCII hosts encode to punycode (xn--) labels; hosts the
+      idna codec rejects are REJECTED rows
+    - drop default ports (http:80, https:443)
+    - collapse dot-segments ("/./", "/../") in the path
+    - empty path -> "/"
+    - REJECT (null) anything that is not http(s), has no host, or exceeds
+      MAX_URL_LEN
+
+  pld(host): pay-level-domain via the vendored public-suffix list
+    ("a.b.example.co.uk" -> "example.co.uk").
+
+Every pass runs in Arrow C++ (re2 regex, contiguous UTF-8 buffers, no
+Python string objects); the only per-row Python is the idna fallback for
+the rare non-ASCII hosts. The crawl loop reaches these kernels through
+prepare.prepare_urls_fused (mapInArrow); single columns reach them through
+the arrow_udf wrappers at the bottom of this module. A pandas twin lives
+in tests/urls_reference.py as the oracle these kernels are fuzz-tested
+against (tests/test_arrow_kernels.py).
 """
 
 from __future__ import annotations
@@ -22,16 +43,63 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from jirlbot_spark.functions.psl import MAX_RULE_LABELS, load_psl
-from jirlbot_spark.functions.urls import (
-    MAX_URL_LEN,
-    PCT_DECODE_PHASE1,
-    PCT_DECODE_PHASE2,
-    PCT_UPPER_PASSES,
-    _suffix_re,
-    idna_encode,
+
+MAX_URL_LEN = 2048
+
+# Percent-encoding normalization tables. The first 12 passes uppercase the
+# hex digits of every valid %xx escape (6 per digit position; no
+# lookarounds, so re2-compatible).
+PCT_UPPER_PASSES: list[tuple[str, str]] = [
+    (f"%{c}([0-9a-fA-F])", f"%{c.upper()}\\1") for c in "abcdef"
+] + [(f"%([0-9A-F]){c}", f"%\\1{c.upper()}") for c in "abcdef"]
+_UNRESERVED = (
+    "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789-._~"
 )
+# Unreserved-escape decode, pinned contract: ITERATED single-pass to
+# FIXPOINT. One round is a true simultaneous single pass, in two
+# literal-replace phases (RE2 has no replacement callback, so a single
+# regex pass isn't expressible here):
+#   phase 1: each valid %XX -> a private-use placeholder U+E0XX.
+#            Placeholders are non-ASCII, so a decode inside one round can
+#            never combine with surrounding text into a NEW escape — the
+#            round is order-independent.
+#   phase 2: placeholder -> the decoded character.
+# Rounds repeat until nothing changes. On well-formed input one round is
+# a no-op-detecting second pass; on malformed stray-% input ('%7%45E')
+# a decode may SYNTHESIZE a new escape ('%7EE'), and the next round
+# decodes it ('~E'). That cascading is a deliberate, documented
+# divergence from one-shot RFC 3986 decoding: the canonical form must be
+# a FIXPOINT of canonicalize (frontier dedup keys would otherwise drift),
+# and one-shot decoding leaves non-fixpoint outputs. Golden-pinned and
+# idempotence-tested in tests/test_urls.py.
+PCT_DECODE_PHASE1: list[tuple[str, str]] = [
+    (f"%{ord(ch):02X}", chr(0xE000 + ord(ch))) for ch in _UNRESERVED
+]
+PCT_DECODE_PHASE2: list[tuple[str, str]] = [
+    (chr(0xE000 + ord(ch)), ch) for ch in _UNRESERVED
+]
+
+
+def idna_encode(host: str) -> str | None:
+    """Punycode-encode one non-ASCII hostname (None = reject). Scalar —
+    called only on the (rare) non-ASCII-host rows; ASCII hosts never
+    reach it."""
+    try:
+        return host.encode("idna").decode("ascii")
+    except Exception:
+        return None
+
+
+def _suffix_re(k: int) -> str:
+    """Regex capturing the last k dot-separated labels (no match -> null)."""
+    if k == 1:
+        return r"([^.]+)$"
+    return r"((?:[^.]+\.){%d}[^.]+)$" % (k - 1)
+
 
 _SPLIT_PAT = (
     r"^(?P<scheme>[a-zA-Z][a-zA-Z0-9+.\-]*)://"
@@ -55,9 +123,8 @@ def _psl_arrow() -> tuple[pa.Array, pa.Array, pa.Array]:
         )
     return _PSL_ARROW
 
-# dot-segment passes — same patterns, same order, same fixpoint loop as
-# urls._remove_dot_segments (rows without the literal "/." can match none
-# of them, so running over the full array ≡ the pandas subset loop)
+# dot-segment passes, applied in order to fixpoint (rows without the
+# literal "/." can match none of them, so only those rows enter the loop)
 _DOT_PASSES = [
     (r"/\./", "/"),
     (r"/\.$", "/"),
@@ -73,21 +140,21 @@ def _concat(*parts):
 
 
 def _strip_ctrl(u: pa.Array) -> pa.Array:
-    """WHATWG control strip (\\t \\n \\r anywhere) — run FIRST in both
-    kernels; '\\n' is also the one character where re2's '$'/'.' semantics
-    diverge from Python re, so stripping it keeps the two implementations
-    bit-equivalent on dirty link data."""
+    """WHATWG control strip (\\t \\n \\r anywhere) — run FIRST; '\\n' is
+    also the one character where re2's '$'/'.' semantics diverge from
+    Python re, so stripping it keeps this kernel bit-equivalent to the
+    pandas oracle on dirty link data."""
     if pc.any(pc.match_substring_regex(u, r"[\t\n\r]")).as_py():
         u = pc.replace_substring_regex(u, r"[\t\n\r]", "")
     return u
 
 
 def _pct_normalize(u: pa.Array) -> pa.Array:
-    """Same pass sequence as urls._pct_normalize (tables imported from
-    there): PUA-placeholder guard, 12 re2 uppercase passes, then the
+    """PUA-placeholder guard (adversarial input carrying the placeholder
+    code points would corrupt phase 2), 12 re2 uppercase passes, then the
     FIXPOINT-iterated two-phase unreserved decode (escape -> placeholder
-    -> char per round; see urls.PCT_DECODE_PHASE1 for why the fixpoint
-    is the pinned contract), only over rows containing '%'."""
+    -> char per round; see PCT_DECODE_PHASE1 for why the fixpoint is the
+    pinned contract), only over rows containing '%'."""
     mask = pc.match_substring(u, "%")
     if not pc.any(mask).as_py():
         return u
@@ -108,8 +175,7 @@ def _pct_normalize(u: pa.Array) -> pa.Array:
 
 
 def _idna_hosts(host: pa.Array) -> pa.Array:
-    """Punycode-encode the (rare) non-ASCII hosts via the shared scalar
-    helper; failures become null (rejected downstream). ASCII rows never
+    """Punycode-encode the (rare) non-ASCII hosts via idna_encode; failures become null (rejected downstream). ASCII rows never
     leave Arrow."""
     nonascii = pc.invert(pc.string_is_ascii(host))
     if not pc.any(nonascii).as_py():
@@ -144,8 +210,8 @@ def _remove_dot_segments(path: pa.Array) -> pa.Array:
 
 
 def resolve_chunk(urls: pa.Array, bases: pa.Array) -> pa.Array:
-    """RFC-3986-style reference resolution, mirroring urls.resolve_series
-    mask for mask: scheme-relative (//x), absolute-path (/x), query-only
+    """RFC-3986-style reference resolution, one mask per reference form:
+    scheme-relative (//x), absolute-path (/x), query-only
     (?q), fragment-only (#f), relative-path, empty reference; relative
     refs with no usable base resolve to "" (rejected downstream)."""
     u = pc.utf8_trim_whitespace(_strip_ctrl(pc.fill_null(urls, "")))
@@ -165,9 +231,9 @@ def resolve_chunk(urls: pa.Array, bases: pa.Array) -> pa.Array:
     origin = pc.if_else(
         pc.equal(b_port, ""), origin, _concat(origin, ":", b_port)
     )
-    # pandas: bp["rest"].fillna("/"). A matched rest is never "" (the
-    # pattern requires at least one char), but re2 reports absent optional
-    # groups as "" rather than null — so "" ⟺ absent ⟺ pandas NaN -> "/"
+    # absent rest -> "/". A matched rest is never "" (the pattern
+    # requires at least one char), but re2 reports absent optional groups
+    # as "" rather than null — so "" ⟺ absent
     b_path = pc.replace_substring_regex(
         pc.if_else(pc.equal(b_rest, ""), "/", b_rest), r"[?#].*$", ""
     )
@@ -205,7 +271,9 @@ def resolve_chunk(urls: pa.Array, bases: pa.Array) -> pa.Array:
     out = pc.if_else(scheme_rel, _concat(b_scheme, ":", u), out)
     out = pc.if_else(abs_path, _concat(origin, u), out)
     out = pc.if_else(query_only, _concat(origin, b_path, u), out)
-    # frag-only keeps the base query (RFC 3986 §5.3) — see urls.py twin
+    # frag-only keeps the base query (RFC 3986 §5.3: query is only
+    # replaced when the reference defines one) — dropping it would alias
+    # href="#section" to a query-stripped sibling page
     out = pc.if_else(
         frag_only, _concat(origin, b_path, b_query, u), out
     )
@@ -219,7 +287,7 @@ def canonicalize_with_host(
 ) -> tuple[pa.Array, pa.Array]:
     """(canonical_url, host) arrays; both null where the URL is rejected.
 
-    Mirrors urls.canonicalize_series: resolve against bases (when given),
+    Resolve against bases (when given),
     trim, strip fragment, split, lowercase scheme+host, trim host dots,
     drop default ports, "" path -> "/", collapse dot-segments, reject
     non-http(s) / hostless / bad-host-char / overlong.
@@ -248,7 +316,7 @@ def canonicalize_with_host(
     if pc.any(pc.match_substring(rest, "?")).as_py():
         # path/query split on the FIRST '?', also literal: a row with a
         # '?' keeps it in the query even when the body is empty (same as
-        # the pandas reference's "(\?.*)$" extract)
+        # a "(\?.*)$" extract)
         ls = pc.split_pattern(rest, "?", max_splits=1)
         path = pc.list_element(ls, 0)
         qbody = pc.binary_join(pc.list_slice(ls, 1, 2), "")
@@ -312,10 +380,19 @@ def host_of_chunk(urls: pa.Array) -> pa.Array:
 
 
 def pld_chunk(hosts: pa.Array) -> pa.Array:
-    """Pay-level-domain via the full public-suffix list, mirroring
-    urls.pld_series exactly (PSL exact/wildcard/exception rules plus the
-    implicit '*' default); IP literals and hosts that are themselves a
-    suffix pass through whole; ""/null -> null."""
+    """Pay-level-domain of a hostname via the full public-suffix list.
+
+    PSL match algorithm: the public-suffix label count is the longest
+    matching exact rule, or parent+1 for a ``*.parent`` wildcard rule,
+    with ``!exception`` rules overriding to len(exception)-1, and the
+    implicit ``*`` default (the bare TLD) when nothing matches. The PLD is
+    one label more than the public suffix. Hosts that ARE a public suffix
+    (or single labels like "localhost") are their own PLD; IPv4 literals
+    pass through whole; ""/null -> null.
+
+    Cost per batch: MAX_RULE_LABELS+1 anchored regex extracts plus ~2·K
+    hash-set membership tests — shape-independent of the 9.5k-rule table.
+    """
     if isinstance(hosts, pa.ChunkedArray):
         hosts = hosts.combine_chunks()
     exact_set, wc_set, exc_set = _psl_arrow()
@@ -382,3 +459,20 @@ def string_bytes_view(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray
         valid = np.asarray(pc.is_valid(arr))
         lens = np.where(valid, lens, 0)
     return data, starts, lens
+
+
+# ---- Spark column wrappers (Arrow-batched, same kernels as prepare) ----
+
+@F.arrow_udf(StringType())
+def canonicalize_udf(urls: pa.Array, bases: pa.Array) -> pa.Array:
+    return canonicalize_chunk(urls, bases)
+
+
+@F.arrow_udf(StringType())
+def host_udf(urls: pa.Array) -> pa.Array:
+    return host_of_chunk(urls)
+
+
+@F.arrow_udf(StringType())
+def pld_udf(hosts: pa.Array) -> pa.Array:
+    return pld_chunk(hosts)

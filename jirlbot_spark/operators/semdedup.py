@@ -93,7 +93,19 @@ def train_centroids(
         .toPandas()
     )
     if len(sample) == 0:
-        sample = vectors.select(F.col(vec_col)).toPandas()
+        # degenerate hash sample: on a genuinely tiny corpus the capped
+        # fallback returns every row; past the cap the ids hash-collapse
+        # and an uncapped collect would pull the whole corpus to the driver
+        sample_cap = 64 * budget
+        sample = (
+            vectors.select(F.col(vec_col)).limit(sample_cap + 1).toPandas()
+        )
+        if len(sample) > sample_cap:
+            raise ValueError(
+                "semantic_dedup: the hash sample came back empty yet the "
+                f"corpus holds more than {sample_cap} rows: the "
+                f"{id_col!r} values hash-collapse (duplicate ids?)"
+            )
     mat = np.vstack(sample[vec_col].to_numpy()).astype(np.float64)
     return _quantize_centroids(_kmeans_numpy(mat, n_clusters, seed))
 

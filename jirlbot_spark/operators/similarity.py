@@ -589,6 +589,12 @@ def ivf_topk(
         .toPandas()
     )
     if len(sample) > sample_cap:
+        if corpus_rows is None:
+            raise ValueError(
+                f"ivf_topk: the training sample overflowed its budget "
+                f"({sample_cap} rows) although the corpus was counted: "
+                f"the {id_col!r} values hash-collapse (duplicate ids?)"
+            )
         raise ValueError(
             f"corpus_rows hint ({corpus_rows}) is >=64x below the true "
             "corpus size (training sample overflowed its budget); pass a "
@@ -605,6 +611,12 @@ def ivf_topk(
             corpus.select(F.col(vec_col)).limit(sample_cap + 1).toPandas()
         )
         if len(sample) > sample_cap:
+            if corpus_rows is None:
+                raise ValueError(
+                    "ivf_topk: the hash sample came back empty yet the "
+                    f"corpus holds more than {sample_cap} rows: the "
+                    f"{id_col!r} values hash-collapse (duplicate ids?)"
+                )
             raise ValueError(
                 f"corpus_rows hint ({corpus_rows}) looks far too HIGH: "
                 "the hash sample came back empty yet the corpus holds "

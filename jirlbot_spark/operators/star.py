@@ -13,8 +13,9 @@ Spark shape:
   - indegree = groupBy(dst_pld).count() over the distinct-edge table
     (map-side partial agg for free); approx_count_distinct variant for the
     10^10 tier where the edge table itself is not materialized
-  - ranking = a global window ONLY over the indegree table (one row per
-    PLD — orders of magnitude smaller than the frontier), result broadcast
+  - ranking runs only over the indegree table (one row per PLD — orders
+    of magnitude smaller than the frontier), with per-partition top-k
+    pruning before the one global window; result broadcast
 """
 
 from __future__ import annotations
@@ -57,33 +58,6 @@ def pld_indegree(
     else:
         agg = F.count(src).alias("indegree")
     return edges.groupBy(F.col(dst).alias("pld_hash")).agg(agg)
-
-
-def star_budgets(
-    indegree: DataFrame,
-    top_k: int = TOP_K,
-    b_hi: int = B_HI,
-    b_lo: int = B_LO,
-) -> DataFrame:
-    """Rank PLDs by indegree (desc, pld_hash asc tiebreak) and assign
-    budgets: rank 1 -> b_hi, rank top_k -> b_lo, linear in between,
-    tail -> b_lo. Output is one row per PLD — broadcast-sized by
-    construction (frontier PLD cardinality, not URL cardinality).
-    """
-    w = Window.orderBy(F.desc("indegree"), F.asc("pld_hash"))
-    span = max(top_k - 1, 1)
-    return indegree.withColumn("rank", F.row_number().over(w)).withColumn(
-        "budget",
-        F.when(
-            F.col("rank") <= top_k,
-            (
-                F.lit(float(b_hi))
-                - (F.col("rank") - 1)
-                * F.lit(float(b_hi - b_lo))
-                / F.lit(float(span))
-            ).cast("long"),
-        ).otherwise(F.lit(int(b_lo)).cast("long")),
-    )
 
 
 PAGERANK_SCALE = 1_000_000  # fixed-point unit: rank 1.0 == 1e6
@@ -132,7 +106,7 @@ def pld_pagerank(
     one-iteration deep. The only driver action is the single upfront
     node count(). Output: (pld_hash, pagerank) — one row per PLD,
     budget-table-sized, broadcastable downstream exactly like
-    star_budgets output.
+    star_budgets_scalable output.
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
@@ -196,16 +170,20 @@ def star_budgets_scalable(
     b_hi: int = B_HI,
     b_lo: int = B_LO,
 ) -> DataFrame:
-    """star_budgets without the all-PLD global window.
+    """Rank PLDs by indegree (desc, pld_hash asc tiebreak) and assign
+    budgets: rank 1 -> b_hi, rank top_k -> b_lo, linear in between,
+    tail -> b_lo. Output is one row per PLD — broadcast-sized by
+    construction (frontier PLD cardinality, not URL cardinality).
 
-    `star_budgets` ranks EVERY PLD through one single-partition window —
-    fine at testdata scale, a straggler at 10^8 PLDs. Only the top_k rows
-    need exact ranks (every other PLD gets b_lo regardless), so this
-    variant does per-partition top-k pruning first (parallel windows over
-    spark_partition_id), then ranks only the ≤ k·partitions survivors
-    globally, and anti-joins the tail back with budget = b_lo, rank null.
+    No all-PLD global window: ranking EVERY PLD through one
+    single-partition window is fine at testdata scale, a straggler at
+    10^8 PLDs. Only the top_k rows need exact ranks (every other PLD gets
+    b_lo regardless), so per-partition top-k pruning runs first (parallel
+    windows over spark_partition_id), then only the ≤ k·partitions
+    survivors are ranked globally; the tail gets budget = b_lo, rank null.
 
-    Budgets are identical to star_budgets for every PLD (property-tested);
+    Budgets equal the single-window formulation's for every PLD
+    (property-tested against the reference in tests/star_reference.py);
     only the tail's rank column differs (null here, dense global rank
     there) — the crawl loop consumes (pld_hash, budget) only.
 

@@ -175,13 +175,14 @@ class TableStore:
         # gc-able orphans either way, but the operator needs the full
         # failure list to diagnose a multi-table outage). The first
         # failure in deterministic dict order is re-raised after all are
-        # logged.
-        errors: dict[str, BaseException] = {}
+        # logged. A non-Exception (KeyboardInterrupt, SystemExit) is not a
+        # write failure: it propagates at once, unlogged and unmasked.
+        errors: dict[str, Exception] = {}
         results: dict[str, str | None] = {}
         for name in writes:
             try:
                 results[name] = futs[name].result()
-            except BaseException as e:  # noqa: BLE001 - logged + re-raised
+            except Exception as e:  # noqa: BLE001 - logged + re-raised
                 errors[name] = e
         if errors:
             for name, e in errors.items():

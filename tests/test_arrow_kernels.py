@@ -1,7 +1,7 @@
-"""Equivalence: Arrow compute kernels (urls_arrow, murmur3_64_from_arrow)
-vs the pandas reference implementations whose contract the golden tables
-in test_urls.py pin. The arrow path is purely a physical optimization —
-any divergence here is a correctness bug."""
+"""Equivalence: the shipped Arrow compute kernels (urls_arrow,
+murmur3_64_from_arrow, prepare_urls_fused) vs the pandas oracle in
+tests/urls_reference.py, whose contract the golden tables in test_urls.py
+pin. Any divergence here is a correctness bug."""
 
 from __future__ import annotations
 
@@ -12,15 +12,7 @@ import pandas as pd
 import pyarrow as pa
 import pytest
 
-from jirlbot_spark.functions.hashing import (
-    murmur3_64_from_arrow,
-    murmur3_64_series,
-)
-from jirlbot_spark.functions.urls import (
-    canonicalize_series,
-    host_of_series,
-    pld_series,
-)
+from jirlbot_spark.functions.hashing import murmur3_64_from_arrow
 from jirlbot_spark.functions.urls_arrow import (
     canonicalize_chunk,
     canonicalize_with_host,
@@ -28,6 +20,13 @@ from jirlbot_spark.functions.urls_arrow import (
     pld_chunk,
 )
 from tests.test_urls import CANON_CASES, PLD_CASES
+from tests.urls_reference import (
+    canonicalize_series,
+    host_of_series,
+    murmur3_64_reference,
+    pld_series,
+    prepare_frame,
+)
 
 NOBASE_CASES = [c for c in CANON_CASES if c[1] == ""]
 
@@ -126,7 +125,7 @@ def test_murmur3_arrow_equivalence():
          for _ in range(2000)]
     s = pd.Series(strs)
     got = murmur3_64_from_arrow(pa.array(s))
-    exp = murmur3_64_series(s).astype("int64").to_numpy()
+    exp = murmur3_64_reference(s).astype("int64").to_numpy()
     assert np.array_equal(got, exp)
 
 
@@ -136,11 +135,11 @@ def test_murmur3_arrow_sliced_and_chunked():
     full = pa.array(s)
     sliced = full.slice(100, 300)
     got = murmur3_64_from_arrow(sliced)
-    exp = murmur3_64_series(s.iloc[100:400]).astype("int64").to_numpy()
+    exp = murmur3_64_reference(s.iloc[100:400]).astype("int64").to_numpy()
     assert np.array_equal(got, exp)
     chunked = pa.chunked_array([full.slice(0, 250), full.slice(250)])
     got2 = murmur3_64_from_arrow(chunked)
-    exp2 = murmur3_64_series(s).astype("int64").to_numpy()
+    exp2 = murmur3_64_reference(s).astype("int64").to_numpy()
     assert np.array_equal(got2, exp2)
 
 
@@ -161,8 +160,8 @@ def test_canonicalize_golden_with_bases():
 
 @pytest.mark.parametrize("seed", [11, 12])
 def test_resolve_fuzz_equivalence(seed):
-    from jirlbot_spark.functions.urls import resolve_series
     from jirlbot_spark.functions.urls_arrow import resolve_chunk
+    from tests.urls_reference import resolve_series
 
     rng = random.Random(seed)
     uf = ["", "/abs/x", "rel/y", "../up", "//oth.er/z", "?q=9", "#top",
@@ -186,11 +185,8 @@ def test_resolve_fuzz_equivalence(seed):
 
 def test_prepare_arrow_base_path_spark(spark):
     """prepare_urls_fused with base_col (arrow resolve path) ≡ the pandas
-    reference path on relative links."""
-    from jirlbot_spark.functions.prepare import (
-        prepare_urls_fused,
-        prepare_urls_pandas,
-    )
+    reference prepare_frame on relative links."""
+    from jirlbot_spark.functions.prepare import prepare_urls_fused
 
     rows = []
     for i in range(300):
@@ -202,14 +198,14 @@ def test_prepare_arrow_base_path_spark(spark):
                 i,
             )
         )
-    df = spark.createDataFrame(rows, ["url", "base", "tag"])
+    pdf = pd.DataFrame(rows, columns=["url", "base", "tag"])
     a = (
-        prepare_urls_fused(df, "url", "base", keep=("tag",))
+        prepare_urls_fused(spark.createDataFrame(pdf), "url", "base", keep=("tag",))
         .toPandas().sort_values("tag").reset_index(drop=True)
     )
     b = (
-        prepare_urls_pandas(df, "url", "base", keep=("tag",))
-        .toPandas().sort_values("tag").reset_index(drop=True)
+        prepare_frame(pdf, "url", "base")
+        .sort_values("tag").reset_index(drop=True)
     )
     assert len(a) == len(b) > 0
     for col in ["url", "url_hash", "host", "host_hash", "pld", "pld_hash", "tag"]:
@@ -219,7 +215,7 @@ def test_prepare_arrow_base_path_spark(spark):
 def test_prepare_arrow_path_spark(spark):
     """prepare_urls_fused (arrow mapInArrow path, base_col=None) produces
     exactly the pandas kernel's rows for a messy frontier."""
-    from jirlbot_spark.functions.prepare import prepare_frame, prepare_urls_fused
+    from jirlbot_spark.functions.prepare import prepare_urls_fused
 
     raws = [c[0] for c in NOBASE_CASES] + [
         f"HTTP://Sub{i % 7}.Example{i % 13}.COM:80/a/../p/{i}?x={i}#f"
@@ -296,7 +292,7 @@ if _HAVE_HYP:
     def test_hypothesis_murmur3_equivalence(strs):
         s = pd.Series(strs, dtype="object")
         got = murmur3_64_from_arrow(pa.array(s, pa.string()))
-        exp = murmur3_64_series(s).astype("int64").to_numpy()
+        exp = murmur3_64_reference(s).astype("int64").to_numpy()
         assert np.array_equal(got, exp)
 
     @settings(max_examples=200, deadline=None)

@@ -1,15 +1,11 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from jirlbot_spark.functions.hashing import (
-    murmur3_64_series,
-    murmur3_x64_128_batch,
-)
+from jirlbot_spark.functions.hashing import murmur3_x64_128_batch
 from tests.scalar_murmur3 import murmur3_x64_128
 
 
@@ -48,14 +44,6 @@ def test_property_matches_scalar(data):
     _check(data)
 
 
-def test_series_signed_int64_and_nulls():
-    s = pd.Series(["http://a.com/", None, "http://b.com/"])
-    out = murmur3_64_series(s)
-    assert out.isna().iloc[1]
-    e1, _ = murmur3_x64_128(b"http://a.com/")
-    assert int(out.iloc[0]) == np.uint64(e1).astype(np.int64)
-
-
 def test_distribution_sanity():
     data = [f"u{i}".encode() for i in range(10000)]
     h1, _ = murmur3_x64_128_batch(data)
@@ -71,12 +59,19 @@ def test_spark_udf_roundtrip(spark):
     from jirlbot_spark.functions.hashing import url_hash_col
 
     df = spark.createDataFrame(
-        [(f"http://s{i}.com/",) for i in range(100)], ["url"]
+        [(f"http://s{i}.com/",) for i in range(100)] + [(None,)], "url string"
     )
     rows = df.withColumn("h", url_hash_col("url")).collect()
+    assert sum(r.h is None for r in rows) == 1  # null stays null, not hash("")
+    signs = set()
     for r in rows:
+        if r.url is None:
+            assert r.h is None
+            continue
         e1, _ = murmur3_x64_128(r.url.encode())
         assert r.h == int(np.uint64(e1).astype(np.int64))
+        signs.add(r.h < 0)
+    assert signs == {True, False}  # signed int64: the top bit reaches Spark
 
 
 def test_xxhash64_scalar_reference(spark):

@@ -137,3 +137,18 @@ def test_no_cartesian_product(spark, corpus):
         .toString()
     )
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
+
+
+def test_collapsed_ids_fallback_sample_is_bounded(spark):
+    """Ids that all hash alike empty the training hash sample; the
+    fallback collect is capped at 64x the sample budget, so past the cap
+    the caller gets a loud error instead of the whole corpus on the
+    driver."""
+    # one id for every row, xxhash64(7) mod 100 != 0: no row hash-samples
+    same_id = spark.range(100).select(
+        F.lit(7).cast("long").alias("vec_id"),
+        F.array(F.col("id"), F.lit(1)).cast("array<long>").alias("embedding"),
+    )
+    # budget = 1 x 1 centroid: cap 64 rows
+    with pytest.raises(ValueError, match="hash-collapse"):
+        train_centroids(same_id, 1, train_rows_per_centroid=1)

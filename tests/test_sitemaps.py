@@ -326,8 +326,8 @@ def test_resolution_matches_urljoin_rfc_vectors():
     both sides. Checked on BOTH kernels (pandas + Arrow)."""
     import pyarrow as pa
 
-    from jirlbot_spark.functions.urls import canonicalize_series
     from jirlbot_spark.functions.urls_arrow import canonicalize_with_host
+    from tests.urls_reference import canonicalize_series
 
     refs = pd.Series(RFC_REFS)
     bases = pd.Series([RFC_BASE] * len(refs))
@@ -344,7 +344,7 @@ def test_resolution_matches_urljoin_rfc_vectors():
 
 
 def test_fragment_only_ref_keeps_base_query():
-    from jirlbot_spark.functions.urls import canonicalize_series
+    from tests.urls_reference import canonicalize_series
 
     out = canonicalize_series(
         pd.Series(["#top", "?n=2", ""]),

@@ -11,8 +11,9 @@ from jirlbot_spark.operators.beast import (
 from jirlbot_spark.operators.star import (
     distinct_new_edges,
     pld_indegree,
-    star_budgets,
+    star_budgets_scalable,
 )
+from tests.star_reference import star_budgets
 
 
 def test_star_indegree_and_budget(spark):
@@ -27,7 +28,7 @@ def test_star_indegree_and_budget(spark):
     deg = {r.pld_hash: r.indegree for r in pld_indegree(d).collect()}
     assert deg == {1: 3, 2: 1}
 
-    budgets = star_budgets(
+    budgets = star_budgets_scalable(
         pld_indegree(d), top_k=2, b_hi=100, b_lo=10
     ).collect()
     by_pld = {r.pld_hash: (r.rank, r.budget) for r in budgets}
@@ -104,7 +105,7 @@ def test_budget_monotonicity(spark):
         [(p, rng.randint(0, 1000)) for p in range(300)],
         ["pld_hash", "indegree"],
     )
-    b = star_budgets(deg, top_k=100, b_hi=1000, b_lo=10).collect()
+    b = star_budgets_scalable(deg, top_k=100, b_hi=1000, b_lo=10).collect()
     by_deg = sorted(b, key=lambda r: (-r.indegree, r.pld_hash))
     budgets = [r.budget for r in by_deg]
     assert budgets == sorted(budgets, reverse=True)
@@ -126,12 +127,10 @@ def test_topk_per_bucket(spark):
 
 
 def test_star_budgets_scalable_equivalence(spark):
-    """star_budgets_scalable ≡ star_budgets on (pld_hash, budget) for
-    every PLD, and on rank for the top-k (the tail's rank is null by
-    contract)."""
+    """star_budgets_scalable ≡ the single-window reference star_budgets
+    on (pld_hash, budget) for every PLD, and on rank for the top-k (the
+    tail's rank is null by contract)."""
     import random
-
-    from jirlbot_spark.operators.star import star_budgets_scalable
 
     rng = random.Random(11)
     rows = [(i, rng.randint(1, 500)) for i in range(937)]

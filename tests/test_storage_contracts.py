@@ -307,6 +307,48 @@ def test_iceberg_partial_multi_table_crash_resumes_exactly(tmp_path):
     assert sorted(store.read("url_seen").rows) == [(7,)]
 
 
+# ------------------------------------------- posix store write failures
+
+
+class _RaisingDF:
+    """Stands in for a table's DataFrame: its parquet write raises."""
+
+    def __init__(self, exc: BaseException):
+        self.exc = exc
+
+    @property
+    def write(self):
+        return self
+
+    def mode(self, _mode):
+        return self
+
+    def parquet(self, _path):
+        raise self.exc
+
+
+def test_commit_interrupt_is_not_a_write_failure(tmp_path, caplog):
+    """A KeyboardInterrupt in one table's write reaches the caller as
+    itself — not relabelled as "write failed", and not replaced by an
+    earlier table's ordinary error — and the manifest stays untouched."""
+    store = TableStore(None, str(tmp_path / "s"))
+    writes = {
+        "frontier": TableWrite(_RaisingDF(OSError("disk full"))),
+        "url_seen": TableWrite(_RaisingDF(KeyboardInterrupt())),
+    }
+    with caplog.at_level("ERROR", logger="jirlbot_spark.storage"):
+        with pytest.raises(KeyboardInterrupt):
+            store.commit_batch(0, writes)
+    assert not [r for r in caplog.records if "failed" in r.getMessage()]
+    assert store.last_batch() == -1
+
+    # an ordinary error alone is still logged and re-raised
+    with caplog.at_level("ERROR", logger="jirlbot_spark.storage"):
+        with pytest.raises(OSError, match="disk full"):
+            store.commit_batch(0, {"frontier": writes["frontier"]})
+    assert any("'frontier' failed" in r.getMessage() for r in caplog.records)
+
+
 # ------------------------------------------- Bloom/snapshot-store guard
 
 

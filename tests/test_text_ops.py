@@ -418,6 +418,18 @@ def test_ivf_stale_high_hint_bounded(spark, vectors):
             corpus_rows=10**12,
         )
 
+    # no hint, but every id equal: the hash sample comes back empty
+    # (xxhash64(7) mod 100 != 0) or holds every row (xxhash64(30) mod 100
+    # == 0), and either error names the ids, not a hint
+    for same_id in (7, 30):
+        collapsed = big.withColumn("vec_id", F.lit(same_id).cast("long"))
+        with pytest.raises(ValueError, match="hash-collapse") as err:
+            ivf_topk(
+                collapsed.limit(2), collapsed, k=2,
+                n_centroids=1, nprobe=1, train_rows_per_centroid=1,
+            )
+        assert "hint" not in str(err.value)
+
 
 def test_blocked_neardup_exact_equals_brute_force(spark):
     """blocked_neardup_exact (block-nested self-join) must equal the

@@ -3,16 +3,22 @@
 Modeled on the reference's IRLbotUtilTest contract (checkAndTransformURL /
 getPLDofURL); reference tree was empty at build time (SURVEY.md §0), so the
 vectors encode the IRLbot-paper / RFC 3986 semantics the north rule pins.
+The pandas functions are the oracle in tests/urls_reference.py; the
+shipped Arrow kernels are held to the same tables here and in
+test_arrow_kernels.py.
 """
 
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
-from jirlbot_spark.functions.urls import (
+from jirlbot_spark.functions.urls_arrow import canonicalize_chunk
+from tests.urls_reference import (
     canonicalize_series,
     host_of_series,
+    murmur3_64_reference,
     pld_series,
 )
 
@@ -20,7 +26,7 @@ REJECT = None
 
 CANON_CASES = [
     # (raw, base, expected)
-    # fixpoint %-decode (pinned contract, urls.py PCT_DECODE_PHASE1
+    # fixpoint %-decode (pinned contract, urls_arrow.PCT_DECODE_PHASE1
     # comment): malformed stray-% input decodes until stable so the
     # canonical form stays idempotent — '%7%45E' -> '%7EE' -> '~E'
     ("http://example.com/%7%45E", "", "http://example.com/~E"),
@@ -125,9 +131,20 @@ def test_canonicalize_golden_table():
         assert got == exp, f"canonicalize({r!r}, base={b!r}) = {got!r}, want {exp!r}"
 
 
-def test_canonicalize_idempotent():
+def _arrow_canonicalize(urls: pd.Series, bases: pd.Series) -> list:
+    return canonicalize_chunk(pa.array(urls), pa.array(bases)).to_pylist()
+
+
+@pytest.mark.parametrize(
+    "canonicalize",
+    [canonicalize_series, _arrow_canonicalize],
+    ids=["pandas", "arrow"],
+)
+def test_canonicalize_idempotent(canonicalize):
+    """The canonical form is a fixpoint: its output is the DRUM key, so a
+    second pass must not move it."""
     raw = pd.Series([c[2] for c in CANON_CASES if c[2] is not None])
-    out = canonicalize_series(raw, pd.Series([""] * len(raw)))
+    out = canonicalize(raw, pd.Series([""] * len(raw)))
     assert list(out) == list(raw)
 
 
@@ -164,16 +181,24 @@ def test_dedup_after_canonicalization():
 def test_spark_canonicalize_udf(spark):
     from pyspark.sql import functions as F
 
-    from jirlbot_spark.functions.urls import canonicalize_udf, pld_udf, host_udf
+    from jirlbot_spark.functions.urls_arrow import (
+        canonicalize_udf,
+        host_udf,
+        pld_udf,
+    )
 
     df = spark.createDataFrame(
         [(c[0], c[1]) for c in CANON_CASES], ["url", "base"]
     )
+    canon = canonicalize_udf(F.col("url"), F.col("base"))
     got = df.select(
-        canonicalize_udf(F.col("url"), F.col("base")).alias("canon")
+        canon.alias("canon"), host_udf(canon).alias("host")
     ).collect()
-    for row, (r, b, exp) in zip(got, CANON_CASES):
+    exp_host = host_of_series(pd.Series([c[2] for c in CANON_CASES]))
+    for i, (row, (r, b, exp)) in enumerate(zip(got, CANON_CASES)):
         assert row.canon == exp, f"{r!r} -> {row.canon!r}, want {exp!r}"
+        eh = exp_host.iloc[i]
+        assert row.host == (None if pd.isna(eh) else eh), r
 
     df2 = spark.createDataFrame([(h,) for h, _ in PLD_CASES], ["host"])
     got2 = df2.select(pld_udf(F.col("host")).alias("pld")).collect()
@@ -183,7 +208,6 @@ def test_spark_canonicalize_udf(spark):
 
 def test_fused_prepare_matches_composed(spark):
     """prepare_urls_fused ≡ composing canonicalize/host/pld/murmur."""
-    from jirlbot_spark.functions.hashing import murmur3_64_series
     from jirlbot_spark.functions.prepare import prepare_urls_fused
 
     raws = [c[0] for c in CANON_CASES] + [
@@ -210,4 +234,4 @@ def test_fused_prepare_matches_composed(spark):
         assert r.url == c
         assert r.host == host_of_series(pd.Series([c])).iloc[0]
         assert r.pld == pld_series(pd.Series([r.host])).iloc[0]
-        assert r.url_hash == int(murmur3_64_series(pd.Series([c])).iloc[0])
+        assert r.url_hash == int(murmur3_64_reference(pd.Series([c])).iloc[0])

@@ -1,51 +1,39 @@
-"""URL canonicalization + pay-level-domain extraction, fully vectorized.
+"""Pandas reference implementation of URL canonicalization, host and
+pay-level-domain extraction — the test oracle for the Arrow kernels the
+package ships (jirlbot_spark/functions/urls_arrow.py, whose module
+docstring states the contract; the golden tables in tests/test_urls.py
+pin it).
 
-Semantics modeled on IRLbot's URL handling (checkAndTransformURL /
-getPLDofURL in the reference's IRLbotUtil; reference tree was empty at build
-time — SURVEY.md §0 — so the contract is pinned by the IRLbot paper and the
-golden table in tests/test_urls.py):
+Every pass here is a pandas Series op (str.extract / str.replace masks)
+over Python's `re`, where the shipped kernel runs re2 over Arrow buffers:
+two regex engines, two string representations, one contract. The
+percent-encoding tables, MAX_URL_LEN, the suffix regex and the scalar
+idna step are imported from the shipped module, so both sides run the
+same pass sequence even on degenerate inputs like stray '%'s.
 
-  canonicalize(url, base):
-    - strip ASCII tab/newline/CR anywhere in url and base first (the
-      WHATWG URL rule; also the ONLY char where Python-re '$'/'.' and
-      re2 semantics diverge, so stripping keeps the pandas and Arrow
-      kernels bit-equivalent on dirty link data)
-    - resolve relative references against base (scheme-relative, absolute
-      path, relative path, query-only)
-    - strip the fragment
-    - percent-encoding normalization (RFC 3986 §6.2.2): uppercase %XX
-      hex, decode unreserved escapes (ALPHA / DIGIT / - . _ ~) — done
-      BEFORE dot-segment removal so a decoded %2E participates in it
-    - lowercase scheme and host; path/query case preserved
-    - IDN: non-ASCII hosts encode to punycode (xn--) labels; hosts the
-      idna codec rejects are REJECTED rows
-    - drop default ports (http:80, https:443)
-    - collapse dot-segments ("/./", "/../") in the path
-    - empty path -> "/"
-    - REJECT (null) anything that is not http(s), has no host, or exceeds
-      MAX_URL_LEN
-
-  pld(host): pay-level-domain via an embedded public-suffix table
-    ("a.b.example.co.uk" -> "example.co.uk").
-
-Implementation is pure pandas Series ops (str.extract / str.replace masks),
-wrapped in Arrow-batched pandas UDFs — no per-row Python anywhere.
+Also here: `prepare_frame`, the pandas twin of prepare.prepare_batch_arrow
+(canonical url, host, pld and their murmur3 keys), built on
+`murmur3_64_reference`, which hashes through the bytes-list entry point
+hashing.murmur3_x64_128_batch rather than the Arrow-buffer one.
 """
 
 from __future__ import annotations
 
 import re
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
-MAX_URL_LEN = 2048
-
-# Full publicsuffix.org rule sets (vendored — functions/psl.py). Loaded
-# lazily so importing this module stays cheap on executors that never
-# touch pld.
+from jirlbot_spark.functions.hashing import murmur3_x64_128_batch
 from jirlbot_spark.functions.psl import MAX_RULE_LABELS, load_psl
+from jirlbot_spark.functions.urls_arrow import (
+    MAX_URL_LEN,
+    PCT_DECODE_PHASE1,
+    PCT_DECODE_PHASE2,
+    PCT_UPPER_PASSES,
+    _suffix_re,
+    idna_encode,
+)
 
 _SCHEME_RE = re.compile(r"^([a-zA-Z][a-zA-Z0-9+.\-]*):")
 # scheme://host[:port][/path...]
@@ -64,47 +52,10 @@ _P_ROOT_END = re.compile(r"^/\.\.$")
 _P_FRAG = re.compile(r"#.*$")
 _P_QUERY = re.compile(r"\?.*$")
 _P_QUERY_CAP = re.compile(r"(\?.*)$")
-_P_LASTSEG = re.compile(r"[^/]*$")
-_P_QF = re.compile(r"[?#].*$")
 _P_BADHOST = re.compile(r"[^a-z0-9.\-:_]")
 _P_CTRL = re.compile(r"[\t\n\r]")
 _P_NONASCII = re.compile(r"[^\x00-\x7f]")
 
-# Percent-encoding normalization tables (shared verbatim with the Arrow
-# kernel — both engines run the SAME pass sequence, so results match even
-# on degenerate inputs like stray '%'s). First 12 passes uppercase the hex
-# digits of every valid %xx escape (6 per digit position; no lookarounds,
-# so re2-compatible), then 66 LITERAL passes decode the unreserved set.
-PCT_UPPER_PASSES: list[tuple[str, str]] = [
-    (f"%{c}([0-9a-fA-F])", f"%{c.upper()}\\1") for c in "abcdef"
-] + [(f"%([0-9A-F]){c}", f"%\\1{c.upper()}") for c in "abcdef"]
-_UNRESERVED = (
-    "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789-._~"
-)
-# Unreserved-escape decode, pinned contract: ITERATED single-pass to
-# FIXPOINT. One round is a true simultaneous single pass, in two
-# literal-replace phases (RE2 has no replacement callback, so a single
-# regex pass isn't expressible in the Arrow kernel):
-#   phase 1: each valid %XX -> a private-use placeholder U+E0XX.
-#            Placeholders are non-ASCII, so a decode inside one round can
-#            never combine with surrounding text into a NEW escape — the
-#            round is order-independent, unlike the old 66-sequential-
-#            literal scheme whose result depended on pass order.
-#   phase 2: placeholder -> the decoded character.
-# Rounds repeat until nothing changes. On well-formed input one round is
-# a no-op-detecting second pass; on malformed stray-% input ('%7%45E')
-# a decode may SYNTHESIZE a new escape ('%7EE'), and the next round
-# decodes it ('~E'). That cascading is a deliberate, documented
-# divergence from one-shot RFC 3986 decoding: the canonical form must be
-# a FIXPOINT of canonicalize (frontier dedup keys would otherwise drift),
-# and one-shot decoding leaves non-fixpoint outputs. Golden-pinned in
-# tests/test_urls.py; fuzzed in tests/test_arrow_kernels.py.
-PCT_DECODE_PHASE1: list[tuple[str, str]] = [
-    (f"%{ord(ch):02X}", chr(0xE000 + ord(ch))) for ch in _UNRESERVED
-]
-PCT_DECODE_PHASE2: list[tuple[str, str]] = [
-    (chr(0xE000 + ord(ch)), ch) for ch in _UNRESERVED
-]
 # adversarial inputs carrying our placeholder code points would corrupt
 # phase 2 — strip them first (they're garbage in a URL either way)
 _P_PUA_GUARD = re.compile("[\\uE000-\\uE0FF]")
@@ -143,16 +94,6 @@ def _pct_normalize(s: pd.Series) -> pd.Series:
     out = s.copy()
     out[m] = sub
     return out
-
-
-def idna_encode(host: str) -> str | None:
-    """Punycode-encode one non-ASCII hostname (None = reject). Scalar —
-    called only on the (rare) non-ASCII-host rows via an explicit mask in
-    both kernels; ASCII hosts never reach it."""
-    try:
-        return host.encode("idna").decode("ascii")
-    except Exception:
-        return None
 
 
 def _remove_dot_segments(paths: pd.Series) -> pd.Series:
@@ -293,13 +234,6 @@ def host_of_series(urls: pd.Series) -> pd.Series:
     return h.str.lower()
 
 
-def _suffix_re(k: int) -> str:
-    """Regex capturing the last k dot-separated labels (no match -> NaN)."""
-    if k == 1:
-        return r"([^.]+)$"
-    return r"((?:[^.]+\.){%d}[^.]+)$" % (k - 1)
-
-
 def pld_series(hosts: pd.Series) -> pd.Series:
     """Pay-level-domain of a hostname via the full public-suffix list.
 
@@ -348,18 +282,37 @@ def pld_series(hosts: pd.Series) -> pd.Series:
     return pld.mask(h == "", pd.NA)
 
 
-# ---- Spark column wrappers (Arrow-batched) ----
-
-@F.pandas_udf(StringType())
-def canonicalize_udf(urls: pd.Series, bases: pd.Series) -> pd.Series:
-    return canonicalize_series(urls, bases).astype("object")
-
-
-@F.pandas_udf(StringType())
-def host_udf(urls: pd.Series) -> pd.Series:
-    return host_of_series(urls).astype("object")
+def murmur3_64_reference(s: pd.Series) -> pd.Series:
+    """First 64 bits of murmur3_x64_128 of each UTF-8 string as signed
+    int64; null stays null."""
+    data = [v.encode("utf-8") for v in s.fillna("").astype(str)]
+    h1, _ = murmur3_x64_128_batch(data)
+    out = pd.Series(h1.view(np.int64), index=s.index, dtype="Int64")
+    return out.mask(s.isna())
 
 
-@F.pandas_udf(StringType())
-def pld_udf(hosts: pd.Series) -> pd.Series:
-    return pld_series(hosts).astype("object")
+def prepare_frame(
+    pdf: pd.DataFrame, url_col: str, base_col: str | None
+) -> pd.DataFrame:
+    """One batch in, prepared batch out (invalid URLs dropped): the six
+    prepared columns followed by every input column except url/base."""
+    bases = pdf[base_col] if base_col else None
+    canon = canonicalize_series(pdf[url_col], bases)
+    keep = pdf.drop(columns=[c for c in (url_col, base_col) if c])
+    ok = canon.notna()
+    canon = canon[ok]
+    keep = keep[ok]
+    host = host_of_series(canon)
+    pld = pld_series(host)
+    out = pd.DataFrame(
+        {
+            "url": canon.astype("object"),
+            "url_hash": murmur3_64_reference(canon),
+            "host": host.astype("object"),
+            "host_hash": murmur3_64_reference(host),
+            "pld": pld.astype("object"),
+            "pld_hash": murmur3_64_reference(pld),
+        },
+        index=canon.index,
+    )
+    return pd.concat([out, keep], axis=1)

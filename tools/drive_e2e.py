@@ -13,7 +13,11 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 
 from jirlbot_spark.functions.hashing import url_hash_col
-from jirlbot_spark.functions.urls import canonicalize_udf, host_udf, pld_udf
+from jirlbot_spark.functions.urls_arrow import (
+    canonicalize_udf,
+    host_udf,
+    pld_udf,
+)
 from jirlbot_spark.operators.dedup import RESULT_COL, check_update
 from jirlbot_spark.session import get_spark
 from jirlbot_spark.sources.storage import TableStore, TableWrite

@@ -44,6 +44,19 @@ def test_property_matches_scalar(data):
     _check(data)
 
 
+def test_series_signed_int64_and_nulls():
+    import pyarrow as pa
+
+    from jirlbot_spark.functions.hashing import _url_hash_udf
+
+    out = _url_hash_udf.func(pa.array(["http://a.com/", None, "http://b.com/"]))
+    assert out.type == pa.int64()
+    assert out[1].as_py() is None  # null stays null, not hash("")
+    e1, _ = murmur3_x64_128(b"http://a.com/")
+    assert out[0].as_py() == np.uint64(e1).astype(np.int64)
+    assert out[0].as_py() < 0  # the top bit survives as a signed int64
+
+
 def test_distribution_sanity():
     data = [f"u{i}".encode() for i in range(10000)]
     h1, _ = murmur3_x64_128_batch(data)

@@ -1052,6 +1052,7 @@ def q_components_update(spark, sf):
         connected_components,
         update_components,
     )
+    from jirlbot_spark.session import materialize
 
     h = (
         spark.range(0, 100)
@@ -1070,7 +1071,7 @@ def q_components_update(spark, sf):
     # incremental pipeline does: the prior labeling is a TABLE read
     # back from storage, not live lineage (live lineage also works;
     # test_graph.py covers it)
-    prior = connected_components(h).localCheckpoint(eager=True)
+    prior = materialize(connected_components(h), "components-prior")
     return update_components(prior, n)
 
 
@@ -2300,6 +2301,7 @@ def q_resume_state(spark, sf):
     import tempfile
 
     from jirlbot_spark.plans.loop import CrawlConfig, CrawlLoop
+    from jirlbot_spark.session import materialize
     from jirlbot_spark.sources.fixtures import gen_pages, resume_scenario
     from jirlbot_spark.sources.storage import TableStore
 
@@ -2337,7 +2339,7 @@ def q_resume_state(spark, sf):
         )
         # materialize under the pinned width (the loop above already ran
         # eagerly; this is the final store read)
-        out = out.localCheckpoint(eager=True)
+        out = materialize(out, "resume-fetch-log")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     return out

@@ -182,6 +182,7 @@ def run_frontier_pipeline(
     from jirlbot_spark.operators.dedup import check_update_agg
     from jirlbot_spark.operators.politeness import politeness_schedule
     from jirlbot_spark.operators.star import star_budgets_scalable
+    from jirlbot_spark.session import materialize
 
     timings = {}
 
@@ -255,10 +256,9 @@ def run_frontier_pipeline(
     # one row per PLD (N_PLDS, tiny) — materialize so the budget
     # operator's two references don't each re-aggregate the
     # frontier-sized fresh table
-    deg = (
-        fresh.groupBy("pld_hash")
-        .agg(F.count("*").alias("indegree"))
-        .localCheckpoint(eager=True)
+    deg = materialize(
+        fresh.groupBy("pld_hash").agg(F.count("*").alias("indegree")),
+        "bench-indegree",
     )
     # the SHIPPED operator (the loop + driver key run star_budgets_scalable;
     # the all-PLD single-window formulation lives only in

@@ -28,8 +28,10 @@ Scale posture (the 100 TB question):
     hot-PLD shape again and AQE's skew-join split handles it (session
     default), while the groupBy side is pre-aggregated map-side;
   - round count is data-dependent but logarithmic; each round ends in
-    localCheckpoint(eager) so the plan never grows with iterations and
-    a straggler round retries from materialized state, not lineage;
+    `session.materialize` so the plan never grows with iterations and
+    a straggler round retries from materialized state, not lineage
+    (executor-local by default, so a lost executor fails the job; set
+    Spark's checkpoint directory to keep rounds on durable storage);
   - convergence is checked EXACTLY (count equality + anti-join
     emptiness), not by a hash proxy — a dedup drop-list must not ship
     on a probabilistic "probably converged".
@@ -44,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from jirlbot_spark.session import materialize
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """One large-star round: emit (v, m(u)) for every neighbor v > u,
@@ -55,7 +59,7 @@ def _large_star(edges: DataFrame) -> DataFrame:
     relation. Spark 4.1's Union constraint rewrite
     (UnionBase.rewriteConstraints) throws `NoSuchElementException: key
     not found: u#N` when a union child is a newInstance'd LogicalRDD
-    from localCheckpoint under some input lineages (observed: edges
+    from a local checkpoint under some input lineages (observed: edges
     built from range ∪ LocalRelation pairs; regression-tested in
     test_graph.py::test_update_components_live_lineage_inputs)."""
     sym = edges.select(
@@ -148,10 +152,10 @@ def connected_components(
         .distinct()
     )
     # cut lineage before iterating; eager so each round's cost is its own
-    edges = edges.localCheckpoint(eager=True)
+    edges = materialize(edges, "cc-edges")
     prev, prev_count = None, -1
     for rounds in range(1, max_iterations + 1):
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        edges = materialize(_small_star(_large_star(edges)), "cc-round")
         count = edges.count()
         if (
             prev is not None
@@ -202,7 +206,7 @@ def update_components(
     # No defensive materialization needed here: the Spark 4.1
     # Union-constraint-rewrite failure this path used to hit
     # (`NoSuchElementException: key not found: u#N` at the loop's first
-    # localCheckpoint) was structural in the star steps' self-unions and
+    # materialization) was structural in the star steps' self-unions and
     # is fixed there (see _large_star); live caller lineage — including
     # feeding connected_components output straight back in — is
     # regression-tested in test_graph.py.

@@ -28,9 +28,10 @@ Physical shape (the substring_dedup plan, one granularity up):
     occurrence = min (doc_id, line_no) struct — deterministic under
     any partitioning/retry/cluster size.
 3.  Join-back marks the occurrences to drop; the occurrence frame
-    feeds both the agg and the probe, so it is localCheckpoint'ed
-    (or written to scratch_dir on multi-node runs) — the minhash A/B
-    measured recompute-per-branch at 5-7x materialized cost.
+    feeds both the agg and the probe, so it is materialized through
+    `session.materialize` (durable parquet when the session has a
+    checkpoint directory) — the minhash A/B measured
+    recompute-per-branch at 5-7x materialized cost.
 4.  Rebuild joins each doc's (bounded: <= its own line count) drop
     list back on doc_id and filters lines by index — text stays at
     document granularity, never exploded into a shuffle.
@@ -52,7 +53,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from jirlbot_spark.operators.substring_dedup import _materialize
+from jirlbot_spark.session import materialize
 
 __all__ = ["normalized_line", "line_occurrences", "line_dedup"]
 
@@ -92,15 +93,12 @@ def line_dedup(
     id_col: str = "doc_id",
     max_occurrences: int = 1,
     keep_first: bool = True,
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """(id, clean_text, n_lines, n_removed) with every corpus-wide
     duplicated line (normalized count > max_occurrences) removed —
     keeping the canonical min-(doc_id, line_no) occurrence when
     keep_first, removing all copies otherwise."""
-    occ = _materialize(
-        line_occurrences(docs, text_col, id_col), scratch_dir, "lines"
-    )
+    occ = materialize(line_occurrences(docs, text_col, id_col), "line-occ")
     per_hash = (
         occ.groupBy("h")
         .agg(

@@ -67,6 +67,7 @@ from jirlbot_spark.operators.similarity import (
     _kmeans_numpy,
     _quantize_centroids,
 )
+from jirlbot_spark.session import materialize
 
 __all__ = ["train_centroids", "assign_cells", "semantic_dedup"]
 
@@ -87,24 +88,33 @@ def train_centroids(
     if n == 0:
         raise ValueError("semantic_dedup: empty corpus")
     mod = max(1, n // budget)
-    sample = (
-        vectors.filter(F.pmod(F.xxhash64(F.col(id_col)), mod) == 0)
-        .select(F.col(vec_col))
-        .toPandas()
-    )
+    # distinct ids sample ~n/mod <= 2x budget rows; a sample past 64x
+    # budget means the ids hash-collapse, and collecting it would pull
+    # the whole corpus to the driver
+    sample_cap = 64 * budget
+    collapsed = f"the {id_col!r} values hash-collapse (duplicate ids?)"
+    sampled = vectors.filter(
+        F.pmod(F.xxhash64(F.col(id_col)), mod) == 0
+    ).select(F.col(vec_col))
+    # count the capped sample, then collect the unlimited frame: limit's
+    # single-partition shuffle may reorder rows, and k-means init
+    # depends on row order
+    if sampled.limit(sample_cap + 1).count() > sample_cap:
+        raise ValueError(
+            "semantic_dedup: the hash sample holds more than "
+            f"{sample_cap} rows: {collapsed}"
+        )
+    sample = sampled.toPandas()
     if len(sample) == 0:
         # degenerate hash sample: on a genuinely tiny corpus the capped
         # fallback returns every row; past the cap the ids hash-collapse
-        # and an uncapped collect would pull the whole corpus to the driver
-        sample_cap = 64 * budget
         sample = (
             vectors.select(F.col(vec_col)).limit(sample_cap + 1).toPandas()
         )
         if len(sample) > sample_cap:
             raise ValueError(
                 "semantic_dedup: the hash sample came back empty yet the "
-                f"corpus holds more than {sample_cap} rows: the "
-                f"{id_col!r} values hash-collapse (duplicate ids?)"
+                f"corpus holds more than {sample_cap} rows: {collapsed}"
             )
     mat = np.vstack(sample[vec_col].to_numpy()).astype(np.float64)
     return _quantize_centroids(_kmeans_numpy(mat, n_clusters, seed))
@@ -230,8 +240,8 @@ def semantic_dedup(
         cent_int = train_centroids(
             vectors, n_clusters, id_col, vec_col, train_rows_per_centroid, seed
         )
-    assigned = assign_cells(vectors, cent_int, id_col, vec_col).localCheckpoint(
-        eager=True
+    assigned = materialize(
+        assign_cells(vectors, cent_int, id_col, vec_col), "semdedup-cells"
     )
     pairs = _within_cell_pairs(assigned, threshold, id_col, vec_col, n_blocks)
     comp = connected_components(pairs)

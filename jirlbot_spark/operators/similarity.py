@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from jirlbot_spark.session import materialize
+
 _PAIR_SCHEMA = StructType(
     [
         StructField("query_id", LongType()),
@@ -157,8 +159,9 @@ def _seal_query_block(part: DataFrame, bq, n_blocks: int) -> DataFrame:
     A blocked run used to keep every block's query broadcast referenced
     by the lazy unioned plan, so block-manager storage still held ~the
     full query matrix. Here each block's partial top-k is materialized
-    eagerly (localCheckpoint — |block|·k·P id/score rows, never vectors)
-    and the block's broadcast destroyed before the next block ships:
+    eagerly through `session.materialize` (|block|·k·P id/score rows,
+    never vectors) and the block's broadcast destroyed before the next
+    block ships:
     storage holds ONE block's broadcast at a time, so the
     O(max_query_block) bound covers executor storage as well as the
     Python heap. Each materialization is its own full corpus scan — a
@@ -166,10 +169,17 @@ def _seal_query_block(part: DataFrame, bq, n_blocks: int) -> DataFrame:
     price of bounding driver + broadcast memory, and the caller picks the
     tradeoff via max_query_block. Single-block runs (the common case)
     return the untouched lazy plan, identical to the pre-blocking
-    implementation."""
+    implementation.
+
+    Fault tolerance follows the materialization mode. Executor-local by
+    default: a sealed partial lost with its executor cannot be
+    recomputed — its broadcast is destroyed — so the whole top-k job
+    fails. With Spark's checkpoint directory set, partials are durable
+    parquet and survive executor loss; on spot or preemptible clusters
+    set it, or raise max_query_block so runs stay single-block."""
     if n_blocks <= 1:
         return part
-    part = part.localCheckpoint(eager=True)
+    part = materialize(part, "topk-block")
     bq.destroy()
     return part
 

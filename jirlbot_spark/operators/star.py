@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from jirlbot_spark.session import materialize
+
 B_HI = 10_000
 B_LO = 10
 TOP_K = 10_000
@@ -102,11 +104,13 @@ def pld_pagerank(
     — AQE handles the hot-PLD skew the same way the budget join does;
     in_sum is a map-side-combinable groupBy; the dangling mass is a
     1-row agg CROSS-JOINED back (broadcast), never a driver round-trip;
-    each iteration ends in an eager localCheckpoint so the plan stays
-    one-iteration deep. The only driver action is the single upfront
-    node count(). Output: (pld_hash, pagerank) — one row per PLD,
-    budget-table-sized, broadcastable downstream exactly like
-    star_budgets_scalable output.
+    the edge, node and out-degree tables and each iteration's ranks go
+    through `session.materialize`, so the plan stays one iteration deep
+    (executor-local by default; with Spark's checkpoint directory set,
+    durable parquet that survives executor loss). The only driver
+    action is the single upfront node count(). Output: (pld_hash,
+    pagerank) — one row per PLD, budget-table-sized, broadcastable
+    downstream exactly like star_budgets_scalable output.
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
@@ -116,16 +120,15 @@ def pld_pagerank(
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    e = e.localCheckpoint(eager=True)
-    nodes = (
+    e = materialize(e, "pagerank-edges")
+    nodes = materialize(
         e.select(F.col("src").alias("pld"))
         .unionByName(e.select(F.col("dst").alias("pld")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "pagerank-nodes",
     )
-    outdeg = (
-        e.groupBy("src").agg(F.count("*").alias("outdeg"))
-        .localCheckpoint(eager=True)
+    outdeg = materialize(
+        e.groupBy("src").agg(F.count("*").alias("outdeg")), "pagerank-outdeg"
     )
     n = nodes.count()
     base = (3 * PAGERANK_SCALE) // PAGERANK_DAMP_DEN
@@ -146,7 +149,7 @@ def pld_pagerank(
             ranks.join(outdeg, ranks["pld"] == outdeg["src"], "left_anti")
             .agg(F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("d"))
         )
-        ranks = (
+        ranks = materialize(
             nodes.join(in_sum, "pld", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -156,8 +159,8 @@ def pld_pagerank(
                     f"(coalesce(in_sum, CAST(0 AS BIGINT))"
                     f" + d DIV {n})) DIV {PAGERANK_DAMP_DEN}"
                 ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "pagerank-ranks",
         )
     return ranks.select(
         F.col("pld").alias("pld_hash"), F.col("rank").alias("pagerank")

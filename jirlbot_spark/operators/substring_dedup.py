@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from jirlbot_spark.functions.text import tokens_col
+from jirlbot_spark.session import materialize
 
 __all__ = [
     "window_hashes",
@@ -99,28 +100,11 @@ def window_hashes(
     )
 
 
-def _materialize(df: DataFrame, scratch_dir: str | None, tag: str) -> DataFrame:
-    """Cut the lineage of a multiply-consumed frame. localCheckpoint
-    (eager) by default — the minhash A/B (text_dedup.minhash_dedup
-    docstring) measured recompute-per-branch at 5-7x the materialized
-    cost and .persist() WORSE than nothing (InMemoryRelation blocks
-    pushdown); pass scratch_dir (HDFS/S3/Iceberg warehouse path) on
-    multi-node runs where executor-local storage is the wrong home."""
-    if scratch_dir is None:
-        return df.localCheckpoint(eager=True)
-    import uuid as _uuid
-
-    path = f"{scratch_dir}/substring_occ_{tag}_{_uuid.uuid4().hex}"
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
-
-
 def duplicated_window_spans(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 8,
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """(id, span_start, span_end) — merged, disjoint, half-open 1-based
     token spans to DELETE per document. Every k-token window occurring
@@ -132,11 +116,13 @@ def duplicated_window_spans(
     The occurrence frame feeds both the per-hash agg and the join-back
     probe; the agg side exchanges partial-agg rows so ReuseExchange
     cannot unify them (verified on the executed plan) — without
-    materialization the corpus would scan + tokenize TWICE. occ is
-    localCheckpoint'ed (or written to scratch_dir), cutting the whole
-    operator to one corpus scan here + one in strip_dup_spans."""
-    occ = _materialize(
-        window_hashes(docs, text_col, id_col, k), scratch_dir, "occ"
+    materialization the corpus would scan + tokenize TWICE. occ goes
+    through `session.materialize` (the minhash A/B in
+    text_dedup.minhash_dedup measured recompute-per-branch at 5-7x the
+    materialized cost, and .persist() worse than nothing), cutting the
+    whole operator to one corpus scan here + one in strip_dup_spans."""
+    occ = materialize(
+        window_hashes(docs, text_col, id_col, k), "substring-occ"
     )
     per_hash = (
         occ.groupBy("wh")
@@ -226,10 +212,9 @@ def dedup_substrings(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 8,
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """End-to-end: (id, clean_text, n_tokens, n_removed) with every
     corpus-duplicated >=k-token run removed from all but its canonical
     occurrence."""
-    spans = duplicated_window_spans(docs, text_col, id_col, k, scratch_dir)
+    spans = duplicated_window_spans(docs, text_col, id_col, k)
     return strip_dup_spans(docs, spans, text_col, id_col)

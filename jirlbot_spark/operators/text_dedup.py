@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from jirlbot_spark.functions.text import tokens_col
+from jirlbot_spark.session import materialize
 
 _log = logging.getLogger("jirlbot_spark.text_dedup")
 
@@ -177,9 +178,12 @@ def bounded_bucket_self_join(
         crawl-scale corpora.
 
     `max_bucket_size=None` keeps the single self-join plan untouched.
-    Capped mode materializes the bucket table (localCheckpoint) — it is
-    scanned by the sizing pass and both join sides, and the uncapped plan
-    was already evaluating the upstream pipeline once per side.
+    Capped mode materializes the bucket table and the hot-key table
+    through `session.materialize` — the bucket table is scanned by the
+    sizing pass and both join sides, and the uncapped plan was already
+    evaluating the upstream pipeline once per side. Both therefore follow
+    the session's checkpoint-directory policy (durable parquet when one
+    is set).
 
     Output columns: key_cols + a_names + b_names, filtered to
     a_names[0] < b_names[0]; dedup across buckets (distinct) is the
@@ -209,15 +213,15 @@ def bounded_bucket_self_join(
     if max_bucket_size is None:
         left, right = sides(buckets)
         return left.join(right, keys).filter(lt)
-    buckets = buckets.localCheckpoint(eager=True)
+    buckets = materialize(buckets, "lsh-buckets")
     # ONE sizing pass: the hot (keys, count) table is small by
     # construction (≤ entries/cap rows) — materialize it and derive both
     # the stats and the broadcast prune set from the checkpoint
-    hot = (
+    hot = materialize(
         buckets.groupBy(*keys)
         .agg(F.count("*").alias("__n"))
-        .filter(F.col("__n") > max_bucket_size)
-        .localCheckpoint(eager=True)
+        .filter(F.col("__n") > max_bucket_size),
+        "lsh-hot",
     )
     stats = hot.agg(
         F.count("*").alias("k"),
@@ -358,7 +362,6 @@ def minhash_dedup(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.8,
-    scratch_dir: str | None = None,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     hot_mode: str = "salted",
 ) -> DataFrame:
@@ -373,35 +376,26 @@ def minhash_dedup(
     round-3 interleaved A/B (tools/ab_minhash.py, probe-balanced, sf0.1)
     refuted: the semi-join pushdown specializes each branch's exchanges so
     NOTHING is reused, and the shingle+LSH pipeline re-executes per branch
-    — 31 s no-materialization vs ~4.6 s with localCheckpoint on both
+    — 31 s no-materialization vs ~4.6 s with a local checkpoint of both
     frames vs ~5.4 s with a parquet intermediate (plain .persist() was
     worst of all at 131-190 s in a degraded window: the InMemoryRelation
     blocks the semi-join pushdown AND still re-derives the candidate
     pipeline from cache 3x).
 
-    Materialization backend: `localCheckpoint(eager)` by default (no
-    config needed; executor-local storage). On a multi-node run where
-    executor loss must be survivable — or at the 100 TB tier where the
-    shingle frame exceeds executor storage — pass `scratch_dir` to write
-    the intermediates as parquet (the bucketed-table shape) instead."""
-    import uuid as _uuid
-
-    def _materialize(df: DataFrame, tag: str) -> DataFrame:
-        if scratch_dir is None:
-            return df.localCheckpoint(eager=True)
-        path = f"{scratch_dir}/minhash_{tag}_{_uuid.uuid4().hex}"
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
-
-    sh = _materialize(
-        shingle_hashes(docs, text_col, id_col, k_shingle), "shingles"
+    Both frames, and capped mode's bucket tables, go through
+    `session.materialize`: executor-local by default, durable parquet
+    when the session has a checkpoint directory — set one on multi-node
+    runs where executor loss must be survivable, or at the 100 TB tier
+    where the shingle frame exceeds executor storage."""
+    sh = materialize(
+        shingle_hashes(docs, text_col, id_col, k_shingle), "minhash-shingles"
     )
     sig = minhash_signatures(sh, id_col, num_hashes)
-    cand = _materialize(
+    cand = materialize(
         lsh_candidate_pairs(
             sig, id_col, num_hashes, bands, max_bucket_size, hot_mode
         ),
-        "cand",
+        "minhash-cand",
     )
     jac = exact_jaccard(sh, cand, id_col)
     return jac.filter(F.col("jaccard") >= threshold).select(
@@ -512,7 +506,6 @@ def text_dup_groups(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.8,
-    scratch_dir: str | None = None,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     hot_mode: str = "salted",
 ) -> DataFrame:
@@ -541,7 +534,6 @@ def text_dup_groups(
         num_hashes,
         bands,
         threshold,
-        scratch_dir,
         max_bucket_size,
         hot_mode,
     )

@@ -51,7 +51,6 @@ def curate_corpus(
     min_words: int = 50,
     max_words: int = 100000,
     max_line_occurrences: int = 1,
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """(id, clean_text, n_lines_removed, <gopher counters+flags>, keep,
     n_email, n_ip, n_phone). clean_text is the deduped+scrubbed text
@@ -61,7 +60,6 @@ def curate_corpus(
         text_col=text_col,
         id_col=id_col,
         max_occurrences=max_line_occurrences,
-        scratch_dir=scratch_dir,
     ).select(
         F.col(id_col),
         F.col("clean_text").alias("__t"),

@@ -59,6 +59,7 @@ from jirlbot_spark.operators.star import (
     pld_indegree,
     star_budgets_scalable,
 )
+from jirlbot_spark.session import materialize
 from jirlbot_spark.sources.storage import TableStore, TableWrite
 
 FRONTIER_SCHEMA = StructType(
@@ -97,6 +98,10 @@ def throttle_frontier(
     return ranked, admitted, overflow
 
 
+# Adaptive politeness reads this many past batches of fetch_log.
+ADAPTIVE_LOOKBACK_BATCHES = 8
+
+
 @dataclass
 class CrawlConfig:
     top_k: int = 100
@@ -110,19 +115,9 @@ class CrawlConfig:
     # Bloom sidecar dir for the url_seen membership fast path (None = off;
     # semantics identical either way — membership.py contract)
     bloom_dir: str | None = None
-    # Parse fetched bodies that look like sitemaps (urlset/sitemapindex
-    # XML or gz with a sitemap-ish URL) and enqueue their entries as
-    # links. Index files recurse naturally: a <sitemap> entry is just a
-    # URL that, once fetched, parses again. Only active when the fetch
-    # backend surfaces a `body` column (live HTTP); candidate selection
-    # is a cheap JVM byte sniff so non-sitemap pages never hit Python.
-    parse_sitemaps: bool = True
     # UA token for robots group selection when a robots_fetcher supplies
     # raw robots.txt bodies (parse_robots_txt_df semantics)
     user_agent: str = "jirlbot"
-    # TTL (in batches — deterministic under resume/replay) for entries
-    # in the dns_cache table when a dns_resolver is injected.
-    dns_ttl_batches: int = 64
     # URL spam-filter gate (operators/url_filter.url_spam_filter kwargs,
     # e.g. {"blocked_domains": ("spam.net",)}; None = gate off). Applied
     # to CANONICALIZED discovered links BEFORE the PLD-graph update and
@@ -132,14 +127,12 @@ class CrawlConfig:
     url_filter_opts: dict | None = None
     # Adaptive politeness (operators/adaptive_politeness): when True and
     # the fetch backend logs rtt_ms (live HTTP does), each batch derives
-    # per-host delays from the last `adaptive_lookback` batches of
-    # fetch_log via the Heritrix delay-factor rule; robots Crawl-delay
-    # still wins where larger. Table-backed fetches have no rtt column,
-    # so the flag is inert there — semantics unchanged.
+    # per-host delays from the last ADAPTIVE_LOOKBACK_BATCHES batches of
+    # fetch_log via the Heritrix delay-factor rule (the operator's
+    # defaults: factor 5, 30 s ceiling); robots Crawl-delay still wins
+    # where larger. Table-backed fetches have no rtt column, so the flag
+    # is inert there — semantics unchanged.
     adaptive_delay: bool = False
-    adaptive_factor: int = 5
-    adaptive_lookback: int = 8
-    adaptive_max_delay_ms: int = 30000
     # Freshness-driven revisits (operators/recrawl): when set, each batch
     # re-enqueues URLs whose exact-integer staleness score crosses this
     # threshold (in batch units), spaced by the +0.5-smoothed change-rate
@@ -591,16 +584,14 @@ class CrawlLoop:
                 )
 
                 window_log = prior_log.filter(
-                    (F.col("batch") >= j - cfg.adaptive_lookback)
+                    (F.col("batch") >= j - ADAPTIVE_LOOKBACK_BATCHES)
                     & F.col("rtt_ms").isNotNull()
                 )
                 to_fetch = with_adaptive_delay(
                     to_fetch,
                     adaptive_host_delays(
                         window_log,
-                        factor_num=cfg.adaptive_factor,
                         min_delay_ms=int(cfg.min_delay_s * 1000),
-                        max_delay_ms=cfg.adaptive_max_delay_ms,
                     ),
                     min_delay_s=cfg.min_delay_s,
                 )
@@ -616,13 +607,13 @@ class CrawlLoop:
             need = dns_ops.dns_needed(hosts_named, dns_prior, j).join(
                 hosts_named, "host_hash"
             )
-            # eager checkpoint: the delta keys this batch's politeness
-            # AND gets committed below — without it the resolver (real
-            # DNS traffic on a cluster) would run once per consumer
-            resolved = self.dns_resolver(need).localCheckpoint(eager=True)
-            dns_delta = dns_ops.refresh_dns_cache(
-                None, resolved, j, cfg.dns_ttl_batches
-            )
+            # materialized: the delta keys this batch's politeness AND
+            # gets committed below — without it the resolver (real DNS
+            # traffic on a cluster) would run once per consumer. Entries
+            # live dns.DEFAULT_TTL_BATCHES batches (deterministic under
+            # resume/replay).
+            resolved = materialize(self.dns_resolver(need), "dns-delta")
+            dns_delta = dns_ops.refresh_dns_cache(None, resolved, j)
             cache_now = (
                 dns_delta
                 if dns_prior is None
@@ -660,7 +651,13 @@ class CrawlLoop:
         if {"status", "location"}.issubset(set(fetched.columns)):
             redirs = route_redirects(fetched, src_col="url")
             links = redirs if links is None else links.unionByName(redirs)
-        if cfg.parse_sitemaps and "body" in fetched.columns:
+        # Fetched bodies that look like sitemaps (urlset/sitemapindex XML
+        # or gz with a sitemap-ish URL) enqueue their entries as links;
+        # index files recurse naturally (a <sitemap> entry is a URL that,
+        # once fetched, parses again). Only backends that surface a `body`
+        # column (live HTTP) take part; candidate selection is a cheap JVM
+        # byte sniff so non-sitemap pages never hit Python.
+        if "body" in fetched.columns:
             sm_links = self._sitemap_links(fetched)
             links = (
                 sm_links if links is None else links.unionByName(sm_links)

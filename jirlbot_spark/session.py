@@ -8,15 +8,19 @@ Scale posture (100 TB / 1000-executor design, local[k] test):
     execution path; per-row Python UDFs are banned in this codebase).
   - ANSI off: classic cast/overflow semantics so engine SQL matches the
     DuckDB oracle's arithmetic (truncating casts handled explicitly).
+
+Every lineage cut in the package goes through `materialize`, whose mode
+follows Spark's own checkpoint directory (see its docstring).
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+import uuid
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Number of hash buckets for the DRUM-analog membership layer. Chosen so one
 # bucket of a 10^10-key url_seen table (~80 GB of longs) is ~2.5 GB — one
@@ -37,6 +41,38 @@ def parse_env_conf(env_conf: str) -> dict[str, str]:
         if k.strip() and v.strip():
             out[k.strip()] = v.strip()
     return out
+
+
+def materialize(df: DataFrame, tag: str) -> DataFrame:
+    """Compute `df` now and return a frame that reads the result, so
+    every later consumer starts from it instead of re-running (or
+    re-planning) its lineage. The one place the package cuts lineage.
+
+    The mode follows Spark's checkpoint directory, set by
+    `spark.checkpoint.dir` or `SparkContext.setCheckpointDir`:
+
+      unset — `localCheckpoint(eager=True)`: blocks live in executor
+        storage, nothing to configure or clean up. Lineage is
+        truncated, so a block lost with its executor cannot be
+        recomputed and the job that reads it fails.
+      set — parquet at `<dir>/materialize/<tag>-<uuid>`, read back.
+        Survives executor loss and holds intermediates larger than
+        executor storage; costs a write to the shared store. Spark does
+        not remove these directories.
+
+    Set the checkpoint directory on runs that must survive executor
+    loss. `tag` names the parquet directory only."""
+    ckpt = df.sparkSession.sparkContext.getCheckpointDir()
+    if ckpt is None:
+        return df.localCheckpoint(eager=True)
+    path = f"{ckpt}/materialize/{tag}-{uuid.uuid4().hex}"
+    df.write.parquet(path)
+    return df.sparkSession.read.parquet(path)
+
+
+def _driver_heap() -> str:
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(ram // 4, 32 << 30) >> 20}m"
 
 
 def get_spark(
@@ -70,10 +106,13 @@ def get_spark(
         )
         .config("spark.sql.session.timeZone", "UTC")
         # local mode: the driver JVM IS the executor — size its heap for
-        # the box (8g thrashed GCLocker and died at 128M-row benches on
-        # this 128 GiB machine; 32g leaves room for tmpfs shuffle data)
+        # the box: a quarter of physical RAM, at most 32g (8g thrashed
+        # GCLocker and died at 128M-row benches on a 128 GiB machine,
+        # where 32g left room for tmpfs shuffle data; a fixed 32g on a
+        # 15 GiB box grew until the kernel OOM-killed the JVM mid-suite)
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", _driver_heap()),
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

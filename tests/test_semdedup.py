@@ -139,14 +139,20 @@ def test_no_cartesian_product(spark, corpus):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
 
-def test_collapsed_ids_fallback_sample_is_bounded(spark):
-    """Ids that all hash alike empty the training hash sample; the
-    fallback collect is capped at 64x the sample budget, so past the cap
-    the caller gets a loud error instead of the whole corpus on the
-    driver."""
-    # one id for every row, xxhash64(7) mod 100 != 0: no row hash-samples
+@pytest.mark.parametrize(
+    "same",
+    [
+        7,  # xxhash64(7) mod 100 == 37: empty sample, capped fallback
+        30,  # xxhash64(30) mod 100 == 0: every row lands in the sample
+    ],
+)
+def test_collapsed_ids_fallback_sample_is_bounded(spark, same):
+    """Ids that all hash alike put either no row or every row in the
+    training hash sample. Both collects are capped at 64x the sample
+    budget, so past the cap the caller gets a loud error instead of the
+    whole corpus on the driver."""
     same_id = spark.range(100).select(
-        F.lit(7).cast("long").alias("vec_id"),
+        F.lit(same).cast("long").alias("vec_id"),
         F.array(F.col("id"), F.lit(1)).cast("array<long>").alias("embedding"),
     )
     # budget = 1 x 1 centroid: cap 64 rows

@@ -165,6 +165,37 @@ def test_lsh_hot_bucket_drop_logged(spark, boilerplate_docs, caplog):
     assert any("DROPPED" in m and "120" in m for m in msgs), msgs
 
 
+def test_minhash_durable_materialization(
+    spark, boilerplate_docs, monkeypatch, tmp_path
+):
+    """With a checkpoint directory set, every lineage cut of a capped
+    MinHash run lands as parquet under it: the same verified pairs as
+    the executor-local default, one parquet directory per materialized
+    table, and no executor-local RDD left in the returned plan."""
+    from pyspark import SparkContext
+
+    def run():
+        out = minhash_dedup(boilerplate_docs, max_bucket_size=16)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return {(r.id_a, r.id_b) for r in out.collect()}, plan
+
+    local_pairs, local_plan = run()
+    assert "ExistingRDD" in local_plan
+    monkeypatch.setattr(
+        SparkContext, "getCheckpointDir", lambda self: str(tmp_path)
+    )
+    durable_pairs, durable_plan = run()
+    assert durable_pairs == local_pairs
+    assert len(local_pairs) >= 120 * 119 // 2
+    assert "ExistingRDD" not in durable_plan
+    written = {
+        d.name.rsplit("-", 1)[0]
+        for d in (tmp_path / "materialize").iterdir()
+        if (d / "_SUCCESS").exists()
+    }
+    assert {"minhash-shingles", "minhash-cand", "lsh-buckets"} <= written
+
+
 def test_simhash_hot_bucket_salted_identical(spark, boilerplate_docs):
     """The same bound on the simhash pigeonhole join: capped+salted ==
     uncapped, pair for pair, hamming for hamming."""

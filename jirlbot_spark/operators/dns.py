@@ -3,9 +3,11 @@
 The IRLbot paper reports DNS resolution as a real crawl bottleneck and
 caches lookups aggressively (IRLbot: §experience with the DNS resolver;
 the reference tree is empty, so semantics are pinned here, not cited).
-The DRUM-style recast is the same shape as robots_requested: resolution
+The DRUM-style recast is the same shape as the robots request: resolution
 is an ANTI-JOIN problem — a host is resolved at most once per TTL
-window, never once per URL.
+window, never once per URL. The robots rules table is itself the
+requested set because rules never expire; a DNS entry does, so the
+"anti-join" here also keeps expired rows.
 
 Design (all deterministic — TTL is counted in BATCHES, not wall clock,
 so resume/replay and the DuckDB oracle see identical decisions):

@@ -1,10 +1,15 @@
 """Robots handling (RobotsCache / RobotsRequested in the reference).
 
-Two DRUM-backed structures in the reference become two joins here:
+Two DRUM-backed structures in the reference become one table and two
+joins here:
 
   - robots_requested: a host is fetched-for-robots at most once →
-    left-anti join of candidate hosts against the requested set (the
-    check_update pattern keyed on host_hash).
+    left-anti join of candidate hosts against the committed robots table
+    (the check_update pattern keyed on host_hash). The reference keeps
+    RobotsRequested apart from RobotsCache because its robots fetches
+    finish later; here a host's rules are fetched, parsed and committed
+    in the same atomic batch that requests them, so the robots table IS
+    the requested set.
   - robots check: URL × cached rules → PASS / FAIL / UNKNOWN(defer),
     with RFC 9309 semantics: Allow + Disallow directives, `*` wildcards
     and `$` end anchors inside rules, longest-match precedence (the
@@ -38,8 +43,11 @@ def robots_requested_new(
     requested: DataFrame | None,
     host_col: str = "host_hash",
 ) -> DataFrame:
-    """Hosts whose robots.txt has never been requested (to fetch now)."""
-    h = hosts.select(host_col).distinct()
+    """Hosts whose robots.txt has never been requested (to fetch now):
+    one row per host_col, other columns (e.g. `host`) riding along.
+    `requested` is any frame of already-requested keys — in the crawl
+    loop, the committed robots table."""
+    h = hosts.dropDuplicates([host_col])
     if requested is None:
         return h
     return h.join(requested.select(host_col), host_col, "left_anti")
@@ -49,8 +57,10 @@ def robots_http_fetcher(transport, scheme: str = "http"):
     """Package a transport as a CrawlLoop `robots_fetcher`: hosts ->
     (host, body) raw robots.txt, fetched as {scheme}://{host}/robots.txt
     inside an Arrow-batched task (hosts are new-this-batch only — the
-    robots_requested anti-join guarantees at most ONE robots fetch per
-    host EVER, so per-host politeness needs no schedule here).
+    anti-join against the committed robots table guarantees at most ONE
+    robots fetch per host EVER, so per-host politeness needs no schedule
+    here; the loop materializes the bodies so the parser's branches do
+    not re-run the fetch).
 
     Failure policy pinned to RFC 9309 §2.3.1: any non-200 outcome maps
     to an empty body -> parse_robots_txt_df yields no rules ->
@@ -129,7 +139,8 @@ def robots_check(
     """Classify each URL PASS / FAIL / UNKNOWN against cached rules.
 
     UNKNOWN = host has no cached robots yet → caller defers the URL and
-    routes the host through robots_requested_new. A NULL/empty disallow
+    routes the host through robots_requested_new (no rules ⇔ never
+    requested, since rules commit with the request). A NULL/empty disallow
     list means allow-all; the sentinel rule "/" disallows everything.
     With an allow list (allow_col, auto-detected when the robots frame
     has an `allow` column), RFC 9309 longest-match applies: the longer

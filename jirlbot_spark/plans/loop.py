@@ -9,10 +9,12 @@ see SURVEY.md §3.1. Per batch j:
       politeness schedule --> fetch (injected backend) --> payload verify -->
       link extraction --> canonicalize+dedup (DRUM) --> frontier_{j+1}
 
-All per-batch outputs (frontier, url_seen, pld_graph, robots,
-robots_requested, fetch_log, metrics) commit ATOMICALLY via one manifest
-rename (TableStore.commit_batch) — crash anywhere re-runs batch j from
-identical inputs (exact resume, north rule).
+All per-batch outputs (frontier, url_seen, pld_graph, robots, fetch_log,
+verify_log, metrics, and dns_cache when a resolver is set) commit
+ATOMICALLY via one manifest rename (TableStore.commit_batch) — crash
+anywhere re-runs batch j from identical inputs (exact resume, north
+rule). The robots table doubles as the reference's RobotsRequested set:
+a host's rules commit in the same batch that first requests them.
 
 Determinism contract (crawl-order equivalence vs tests/oracle_sim.py):
 ordering is always (priority asc, url_hash asc); priority = discovery
@@ -381,17 +383,30 @@ class CrawlLoop:
 
     def ingest_seeds(self, seeds: DataFrame, url_col: str = "url") -> int:
         """Batch 0: canonicalize + dedup seeds into the frontier."""
+        return self._ingest(seeds, 0, url_col).count()
+
+    def _ingest(
+        self, seeds: DataFrame, batch_id: int, url_col: str = "url"
+    ) -> DataFrame:
+        """Seed ingest as its own DRUM check_update, committed as batch
+        `batch_id` (commit_batch rejects an id already committed); the
+        fresh rows, due at batch_id + 1, join the committed frontier when
+        one exists. Returns the fresh rows."""
         prepared = self._prepare_urls(seeds, url_col, None, 0)
-        fresh, uniques = self._dedup_new(prepared, 1)
+        fresh, uniques = self._dedup_new(prepared, batch_id + 1)
+        frontier = self.store.read("frontier")
         self.store.commit_batch(
-            0,
+            batch_id,
             {
-                "frontier": TableWrite(fresh, mode="overwrite"),
+                "frontier": TableWrite(
+                    fresh if frontier is None else frontier.unionByName(fresh),
+                    mode="overwrite",
+                ),
                 "url_seen": TableWrite(uniques, partition_by=("bucket",)),
             },
             pre_commit=self._update_bloom,
         )
-        return fresh.count()
+        return fresh
 
     def _update_bloom(self, runs: dict[str, str]) -> None:
         """OR the batch's new url_seen run into the Bloom sidecars. Runs
@@ -511,58 +526,49 @@ class CrawlLoop:
         ).drop("robots_status", "path")
         blocked = checked.filter(F.col("robots_status") == "FAIL")
 
-        # fetch robots for hosts seen but unknown (once per host ever)
-        requested = self.store.read("robots_requested")
+        # fetch robots for hosts seen but unknown (once per host ever).
+        # The committed robots table IS the requested set: a host's rules
+        # are fetched, parsed and committed in the same atomic batch that
+        # first requests them, so no host is ever requested yet ruleless.
         hosts_to_fetch = robots_ops.robots_requested_new(
-            checked.select("host_hash", "host"), requested
-        ).join(checked.select("host_hash", "host").distinct(), "host_hash")
-        empty_rules = F.array().cast("array<string>")
+            checked.select("host_hash", "host"), robots
+        )
         if self.robots_fetcher is not None:
-            # LIVE path: fetch raw bodies (once per host ever — the
-            # anti-join above guarantees it) and parse with the full
-            # RFC 9309 grammar; fetch failures parse to no rules =
-            # allow-all (robots_http_fetcher docstring pins the policy)
-            bodies = self.robots_fetcher(hosts_to_fetch.select("host"))
-            parsed = robots_ops.parse_robots_txt_df(
+            # LIVE path: raw bodies parsed with the full RFC 9309 grammar;
+            # fetch failures parse to no rules = allow-all
+            # (robots_http_fetcher docstring pins the policy). Materialized:
+            # the parser scans its input in a dozen branches, and each
+            # would otherwise re-run the fetch (real traffic on a cluster).
+            bodies = materialize(
+                self.robots_fetcher(hosts_to_fetch.select("host")),
+                "robots-bodies",
+            )
+            rules = robots_ops.parse_robots_txt_df(
                 bodies, user_agent=cfg.user_agent
             )
-            new_robots = hosts_to_fetch.join(parsed, "host", "left").select(
-                "host_hash",
-                "host",
-                F.coalesce("allow", empty_rules).alias("allow"),
-                F.coalesce("disallow", empty_rules).alias("disallow"),
-                F.coalesce("crawl_delay", F.lit(0.0)).alias("crawl_delay"),
-            )
-        elif self.robots_source is not None:
-            new_robots = (
-                hosts_to_fetch.join(self.robots_source, "host", "inner")
-                .select(
-                    "host_hash",
-                    "host",
-                    empty_rules.alias("allow"),
-                    "disallow",
-                    "crawl_delay",
-                )
-            )
-            # hosts absent from the source get allow-all
-            missing = hosts_to_fetch.join(
-                self.robots_source.select("host"), "host", "left_anti"
-            ).select(
-                "host_hash",
-                "host",
-                empty_rules.alias("allow"),
-                empty_rules.alias("disallow"),
-                F.lit(0.0).alias("crawl_delay"),
-            )
-            new_robots = new_robots.unionByName(missing)
         else:
-            new_robots = hosts_to_fetch.select(
-                "host_hash",
-                "host",
-                empty_rules.alias("allow"),
-                empty_rules.alias("disallow"),
-                F.lit(0.0).alias("crawl_delay"),
-            )
+            rules = self.robots_source
+        # one left join: a host the rules do not name (or name with null
+        # lists) commits allow-all with no crawl delay
+        joined = (
+            hosts_to_fetch
+            if rules is None
+            else hosts_to_fetch.join(rules, "host", "left")
+        )
+        empty_rules = F.array().cast("array<string>")
+
+        def rule(name: str, default):
+            if name in joined.columns:
+                default = F.coalesce(name, default)
+            return default.alias(name)
+
+        new_robots = joined.select(
+            "host_hash",
+            "host",
+            rule("allow", empty_rules),
+            rule("disallow", empty_rules),
+            rule("crawl_delay", F.lit(0.0)),
+        )
 
         # politeness schedule + fetch
         delays = (
@@ -800,9 +806,6 @@ class CrawlLoop:
             "fetch_log": TableWrite(fetch_log),
             "metrics": TableWrite(metrics),
             "robots": TableWrite(new_robots),
-            "robots_requested": TableWrite(
-                new_robots.select("host_hash")
-            ),
         }
         if verify_log is not None:
             writes["verify_log"] = TableWrite(verify_log)

@@ -85,6 +85,16 @@ class TableStore:
     def last_batch(self) -> int:
         return int(self.manifest()["batch_id"])
 
+    def _swap_manifest(self, m: dict) -> None:
+        """Durably replace the manifest: write a temp file, fsync it,
+        then os.replace — the one atomic step every commit hinges on."""
+        tmp = self._manifest_path() + f".tmp.{uuid.uuid4().hex[:8]}"
+        with open(tmp, "w") as f:
+            json.dump(m, f, indent=1)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, self._manifest_path())
+
     # ---- reads ----
     def exists(self, name: str) -> bool:
         return bool(self.manifest()["tables"].get(name))
@@ -212,12 +222,7 @@ class TableStore:
             "tables": tables,
             "committed_at": time.time(),
         }
-        tmp = self._manifest_path() + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(new_manifest, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._manifest_path())  # the atomic commit point
+        self._swap_manifest(new_manifest)  # the atomic commit point
         return runs_written
 
     # ---- maintenance ----
@@ -239,12 +244,7 @@ class TableStore:
         writer.parquet(out)
         old = m["tables"][name]
         m["tables"][name] = [run]
-        tmp = self._manifest_path() + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._manifest_path())
+        self._swap_manifest(m)
         for d in old:
             shutil.rmtree(os.path.join(self.root, name, d), ignore_errors=True)
 
@@ -418,12 +418,7 @@ class IcebergTableStore(TableStore):
             "tables": tables,
             "committed_at": time.time(),
         }
-        tmp = self._manifest_path() + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(new_manifest, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._manifest_path())
+        self._swap_manifest(new_manifest)
         return runs_written
 
     def compact(self, name: str, partition_by: tuple[str, ...] = ()) -> None:
@@ -433,9 +428,4 @@ class IcebergTableStore(TableStore):
         )
         m = self.manifest()
         m["tables"][name] = [self._last_snapshot(name)]
-        tmp = self._manifest_path() + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._manifest_path())
+        self._swap_manifest(m)

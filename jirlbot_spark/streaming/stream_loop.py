@@ -69,25 +69,8 @@ def stream_crawl(
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.head(1):
-            # seed ingest is itself a DRUM check_update; commit under the
-            # next batch id
-            prepared = loop._prepare_urls(batch_df, "url", None, 0)
-            nxt = loop.store.last_batch() + 1
-            fresh, uniques = loop._dedup_new(prepared, nxt)
-            frontier = loop.store.read("frontier")
-            from jirlbot_spark.sources.storage import TableWrite
-
-            merged = (
-                frontier.unionByName(fresh) if frontier is not None else fresh
-            )
-            loop.store.commit_batch(
-                nxt,
-                {
-                    "frontier": TableWrite(merged, mode="overwrite"),
-                    "url_seen": TableWrite(uniques, partition_by=("bucket",)),
-                },
-                pre_commit=loop._update_bloom,
-            )
+            # seed ingest commits under the next batch id
+            loop._ingest(batch_df, loop.store.last_batch() + 1)
         loop.run(passes_per_trigger)
         state["batches"] += passes_per_trigger
         if max_batches and state["batches"] >= max_batches:

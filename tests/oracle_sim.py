@@ -199,7 +199,8 @@ def simulate(
             host = host_of(r.url)
             if host in robots_known:
                 rules, _ = robots_known[host]
-                if any(path_of(r.url).startswith(d) for d in rules):
+                # a null (None) disallow list allows all
+                if any(path_of(r.url).startswith(d) for d in rules or ()):
                     continue  # FAIL: dropped
                 passed.append(r)
             else:

@@ -32,6 +32,9 @@ WEB_GRAPH = [
     ("http://sitea.com/p1", "http://siteb.com/p2"),
     ("http://siteb.com/p1", "http://sitea.com/p3"),
     ("http://sitee.com/p1", "http://sitea.com/"),   # already seen
+    # hosts the robots source leaves open: unnamed, and a null disallow
+    ("http://sitec.com/", "http://norobots.com/p1"),
+    ("http://sitea.com/", "http://nulldis.com/p1"),
     # spam cluster: heavy self-linking, no external in-degree
     ("http://spam.junk.com/a", "http://spam.junk.com/b"),
     ("http://spam.junk.com/b", "http://spam.junk.com/a"),
@@ -43,6 +46,7 @@ ROBOTS = {
     "sitec.com": ([], 0.0),
     "private.sited.com": (["/secret"], 0.0),
     "sitee.com": ([], 0.0),
+    "nulldis.com": (None, 0.0),
 }
 
 CFG = dict(top_k=3, b_hi=4, b_lo=1, default_budget=2, min_delay_s=1.0)
@@ -119,6 +123,19 @@ def test_robots_blocked_never_fetched(spark, engine_run):
     loop, _ = engine_run
     log = loop.store.read("fetch_log")
     assert log.filter(F.col("url").contains("/secret")).count() == 0
+
+
+def test_robots_source_gaps_allow_all(spark, engine_run):
+    """A host the static robots source does not name, or names with a
+    null disallow, commits allow-all rules with no crawl delay, and its
+    URLs are fetched."""
+    loop, _ = engine_run
+    rules = {r.host: r for r in loop.store.read("robots").collect()}
+    for host in ("norobots.com", "nulldis.com"):
+        r = rules[host]
+        assert (r.allow, r.disallow, r.crawl_delay) == ([], [], 0.0), r
+    fetched = {r.url for r in loop.store.read("fetch_log").collect()}
+    assert {"http://norobots.com/p1", "http://nulldis.com/p1"} <= fetched
 
 
 def test_resume_equivalence(spark, tmp_path_factory, engine_run, sim_result):

@@ -14,15 +14,19 @@ from jirlbot_spark.operators.robots import (
 
 
 def test_robots_requested_anti(spark):
-    hosts = spark.createDataFrame([(1,), (2,), (3,), (2,)], ["host_hash"])
-    requested = spark.createDataFrame([(2,)], ["host_hash"])
-    out = sorted(
-        r.host_hash for r in robots_requested_new(hosts, requested).collect()
+    hosts = spark.createDataFrame(
+        [(1, "a.com"), (2, "b.com"), (3, "c.com"), (2, "b.com")],
+        ["host_hash", "host"],
     )
-    assert out == [1, 3]
+    requested = spark.createDataFrame([(2,)], ["host_hash"])
+    # one row per host_hash, with `host` riding along
+    out = sorted(
+        tuple(r) for r in robots_requested_new(hosts, requested).collect()
+    )
+    assert out == [(1, "a.com"), (3, "c.com")]
     assert sorted(
-        r.host_hash for r in robots_requested_new(hosts, None).collect()
-    ) == [1, 2, 3]
+        tuple(r) for r in robots_requested_new(hosts, None).collect()
+    ) == [(1, "a.com"), (2, "b.com"), (3, "c.com")]
 
 
 def test_robots_check_classification(spark):
@@ -300,7 +304,12 @@ def test_loop_live_robots_fetcher(spark, tmp_path):
         b"Disallow: /\n"  # the * group must NOT apply to us
     )
 
+    requests_log = str(tmp_path / "requests.log")
+
     def transport(url):
+        # every request, from whichever worker makes it
+        with open(requests_log, "a") as f:
+            f.write(url + "\n")
         if url == "http://l-site.com/robots.txt":
             return {"status": 200, "content_type": "", "body": ROBOTS_BODY}
         return {"status": 200, "content_type": "", "body": b"<html>ok</html>"}
@@ -354,9 +363,12 @@ def test_loop_live_robots_fetcher(spark, tmp_path):
     # parsed Crawl-delay: 2s spacing between the host's two fetches
     times = sorted(r.planned_at_s for r in fetched.values())
     assert times[1] - times[0] >= 2.0
-    # once-per-host-ever robots contract: one requested row, one rules
+    # once-per-host-ever robots contract: robots.txt requested exactly
+    # once over the run (parsing must not re-run the fetch), one rules
     # row, and the parsed rule lists landed in the store
-    assert store.read("robots_requested").count() == 1
+    with open(requests_log) as f:
+        requested = f.read().split()
+    assert requested.count("http://l-site.com/robots.txt") == 1
     rules = store.read("robots").collect()
     assert len(rules) == 1
     assert rules[0].disallow == ["/private"]

@@ -36,6 +36,35 @@ def capture_plan(df, execute: bool = True) -> str:
     return buf.getvalue()
 
 
+# per-run counters in plan text: expression ids, exchange plan ids,
+# codegen stage ids, RDD ids and AQE query stage ids
+_RUN_IDS = (
+    r"#(\d+)",
+    r"plan_id=(\d+)",
+    r"codegen id : (\d+)",
+    r"RDD\[(\d+)\]",
+    r"QueryStage\n(?:Output .*\n)?Arguments: (\d+)\n",
+)
+
+
+def stable_text(plan: str, workdir: str) -> str:
+    """The plan as written to PLANS.md: the per-run temp workdir becomes
+    `<workdir>` and each per-run counter is renumbered in order of first
+    appearance, so repeat runs write identical bytes for identical plans.
+    Checks read the raw plans, never this text."""
+    text = plan.replace(workdir, "<workdir>")
+    for pattern in _RUN_IDS:
+        ids: dict[str, int] = {}
+
+        def renumber(m: re.Match) -> str:
+            new = ids.setdefault(m.group(1), len(ids) + 1)
+            at, end = m.start(1) - m.start(), m.end(1) - m.start()
+            return m.group(0)[:at] + str(new) + m.group(0)[end:]
+
+        text = re.sub(pattern, renumber, text)
+    return text
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -281,8 +310,7 @@ def main() -> None:
     cc_edges = spark.createDataFrame(
         [(int(i), int(i) + 1) for i in range(200)], "u long, v long"
     )
-    cc_df = _small_star(_large_star(cc_edges))
-    cc_plan = capture_plan(cc_df)
+    cc_plan = capture_plan(_small_star(_large_star(cc_edges)))
     sections.append(
         (
             "Connected components round (large-star + small-star)",
@@ -290,8 +318,13 @@ def main() -> None:
             "the node id — a CartesianProduct here would be quadratic "
             "in the dup-pair count; the groupBy mins must combine "
             "map-side (partial_min) so a hot component root never "
-            "ships its whole neighborhood to one reducer pre-agg.",
-            cc_plan,
+            "ships its whole neighborhood to one reducer pre-agg. "
+            "Shown before execution: the round's two join sides are "
+            "equal in size, so the executed plan broadcasts whichever "
+            "stage finishes first. The checks read the executed plan.",
+            capture_plan(
+                _small_star(_large_star(cc_edges)), execute=False
+            ),
         )
     )
 
@@ -702,7 +735,7 @@ def main() -> None:
     for title, commentary, plan in sections:
         out.append(f"## {title}\n")
         out.append(commentary + "\n")
-        out.append("```\n" + plan.strip() + "\n```\n")
+        out.append("```\n" + stable_text(plan.strip(), wd) + "\n```\n")
     Path("PLANS.md").write_text("\n".join(out))
     print("PLANS.md written; checks:")
     for name, ok in checks.items():

@@ -14,14 +14,20 @@ default 20% of URLs on one PLD):
   -> STAR-budgeted BEAST admission (salted; JIRLBOT_BENCH_SALT)
   -> politeness schedule.
 
+Every timing reports wall seconds next to `cpu_s`: user+system CPU
+seconds of this process's whole tree (driver, Spark JVM, Python workers)
+read from /proc by perfbench/proctree.py. Steal time is not CPU time, so
+`cpu_s` stays put when a shared host slows the wall clock down.
+
 Modes:
   python bench.py                 # driver mode: headline + query timings
   python bench.py --frontier-only # one pipeline run, JSON (used by --scaling)
   python bench.py --scaling       # N vs 4N cores (JIRLBOT_SCALING_CORES,
-                                  # default 8,32), median probe-balanced
-                                  # verdict -> BENCH/BASELINE.md
-                                  # (JIRLBOT_SCALING_APPEND=1 appends a
-                                  # session instead of rewriting)
+                                  # default 8,32): median efficiency of
+                                  # JIRLBOT_SCALING_PAIRS interleaved
+                                  # pairs, appended to BENCH/BASELINE.md
+                                  # (JIRLBOT_SCALING_OVERWRITE=1 rewrites
+                                  # the file instead)
   python bench.py --loop          # full crawl loop pages/s, incl. the
                                   # per-batch payload-verify stage
 """
@@ -32,12 +38,16 @@ import json
 import os
 import shutil
 import subprocess
+import statistics
 import sys
 import tempfile
 import time
+from functools import partial
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+
+from perfbench.proctree import tree_cpu_s  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -185,6 +195,7 @@ def run_frontier_pipeline(
     from jirlbot_spark.session import materialize
 
     timings = {}
+    cpu0 = tree_cpu_s(os.getpid())
 
     # phase 1: canonicalize + key the frontier; persist like a real batch
     t0 = time.time()
@@ -307,6 +318,7 @@ def run_frontier_pipeline(
         "n_ranges": n_ranges,
         "timings": timings,
         "wall_s": wall,
+        "cpu_s": tree_cpu_s(os.getpid()) - cpu0,
         "urls_per_sec": n / wall,
     }
 
@@ -397,16 +409,18 @@ def run_loop_bench(spark, n_sites: int = 2000, n_batches: int = 4) -> dict:
         ),
     )
     loop = CrawlLoop(spark, store, pages, links, robots, cfg)
-    t0 = time.time()
+    cpu0, t0 = tree_cpu_s(os.getpid()), time.time()
     loop.ingest_seeds(seeds)
     stats = loop.run(n_batches)
     wall = time.time() - t0
+    cpu = tree_cpu_s(os.getpid()) - cpu0
     fetched = sum(st.get("fetched", 0) for st in stats)
     shutil.rmtree(wd, ignore_errors=True)
     return {
         "pages_fetched": fetched,
         "batches": len(stats),
         "wall_s": round(wall, 2),
+        "cpu_s": round(cpu, 2),
         "pages_per_sec": round(fetched / wall, 1),
         "per_batch_fetched": [st.get("fetched", 0) for st in stats],
     }
@@ -444,28 +458,30 @@ def frontier_only_main() -> None:
         spark.stop()
 
 
+def time_forced(build) -> tuple[float, float]:
+    """(wall_s, cpu_s) of building the DataFrame `build()` returns and
+    writing it to Spark's noop sink.
+
+    A write keeps every projected column, so the joins, windows and
+    Python UDFs the plan names all run; `count()` lets Catalyst prune
+    them. `build` is called inside the clocks because some keys do eager
+    work (a materialized intermediate, a collected sample) while they
+    build their frame."""
+    pid = os.getpid()
+    cpu0, t0 = tree_cpu_s(pid), time.perf_counter()
+    build().write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0, tree_cpu_s(pid) - cpu0
+
+
 def run_query_timings(
     spark, deadline: float | None = None
 ) -> tuple[dict[str, float], dict[str, dict]]:
-    """Per-key timings, noise-armored (r2 verdict #9, probe-gated per r4
-    verdict #3): each key runs JIRLBOT_BENCH_QUERY_REPEATS times (default
-    3) and reports the MIN — on a host with documented ~4x CPU swings a
-    single sample can masquerade as a regression. The per-query armor now
-    carries the SAME probe gate as the frontier armor (the r4 asymmetry):
-    before each attempt, wait (bounded by the shared wait budget) until a
-    0.5 s cpu probe clears JIRLBOT_PROBE_FLOOR, and if every recorded
-    attempt for a key ran under a collapsed probe, spend up to
-    JIRLBOT_BENCH_QUERY_EXTRA (default 2) extra attempts chasing one
-    healthy-window sample. The detail dict keeps every run plus its probe
-    so a degraded window is visible in the artifact itself."""
+    """Per-key timings: each key runs JIRLBOT_BENCH_QUERY_REPEATS times
+    (default 3) and reports the fastest wall time; the detail dict keeps
+    every run's wall (`s`) and tree CPU (`cpu_s`) seconds."""
     import __spark_entry__ as entrymod
 
     repeats = max(1, int(os.environ.get("JIRLBOT_BENCH_QUERY_REPEATS", "3")))
-    floor = float(os.environ.get("JIRLBOT_PROBE_FLOOR", "150"))
-    extra = max(0, int(os.environ.get("JIRLBOT_BENCH_QUERY_EXTRA", "2")))
-    # one shared wait pool for the whole table (28 keys x a per-key wait
-    # would blow any outer deadline on a bad host)
-    wait_pool = float(os.environ.get("JIRLBOT_BENCH_QUERY_WAIT_S", "60"))
     qs = entrymod.queries()
     out: dict[str, float] = {}
     detail: dict[str, dict] = {}
@@ -474,34 +490,10 @@ def run_query_timings(
         # past the deadline, one run per remaining key (never zero —
         # a missing key would look like a dropped operator)
         past = deadline is not None and time.time() > deadline
-        n_runs = 1 if past else repeats
-        # the probe gate + extra-attempt chase exist for the repeated
-        # (min-of-N) armor; an explicit REPEATS=1 smoke table keeps the
-        # old exactly-one-run-per-key behavior with no probing or waits
-        armor = not past and n_runs > 1
         runs = []
-        attempts_left = n_runs + (extra if armor else 0)
-        while attempts_left > 0:
-            attempts_left -= 1
-            probe = cpu_probe(0.5) if armor else 0.0
-            while armor and probe < floor and wait_pool > 0:
-                time.sleep(3.0)
-                wait_pool -= 3.5
-                probe = cpu_probe(0.5)
-            t0 = time.time()
-            fn(spark, SF_DIR).count()
-            runs.append(
-                {"s": round(time.time() - t0, 3), "probe": round(probe)}
-            )
-            if len(runs) < n_runs:
-                continue
-            # planned repeats done: stop unless EVERY attempt ran under
-            # a collapsed probe (then chase one healthy sample with the
-            # extra budget, deadline permitting)
-            if not armor or any(r["probe"] >= floor for r in runs):
-                break
-            if deadline is not None and time.time() > deadline:
-                break
+        for _ in range(1 if past else repeats):
+            wall, cpu = time_forced(partial(fn, spark, SF_DIR))
+            runs.append({"s": round(wall, 3), "cpu_s": round(cpu, 3)})
         out[key] = min(r["s"] for r in runs)
         detail[key] = {"runs": runs}
     return out, detail
@@ -510,88 +502,45 @@ def run_query_timings(
 def run_frontier_headline(
     spark, deadline: float | None = None
 ) -> tuple[dict, list[dict]]:
-    """Best-of-N frontier runs with a probe gate (r2 verdict #9 applied to
-    the HEADLINE, not just the per-query table): this host's CPU speed
-    swings ~4x across minutes-apart windows, and a single-sample headline
-    taken in a collapsed window (observed: probe 139, prepare_s 102 s)
-    misreports the engine by that factor. Protocol, all raw data shipped:
+    """Best of JIRLBOT_BENCH_FRONTIER_REPEATS (default 3) frontier runs.
 
-      - before each timed attempt, wait (bounded) until a 1 s cpu probe
-        clears JIRLBOT_PROBE_FLOOR (default 150 M ops/s; healthy ~250+),
-      - run the full pipeline, stamp pre/post cpu probes AND an 8-proc
-        triad memory-bandwidth stamp (the engine is memory-bound and
-        this host's aggregate DRAM bandwidth is BIMODAL — ~29 vs ~112
-        GB/s across minutes-apart windows, SCALE.md — which an ALU
-        probe cannot see),
-      - stop early only if an attempt ran entirely inside a healthy
-        window: both cpu probes >= JIRLBOT_BENCH_HEALTHY_PROBE
-        (default 230) and the bandwidth stamp >= JIRLBOT_BENCH_HEALTHY_MEMBW
-        (default 60 GB/s, between the two observed modes) — and never
-        before JIRLBOT_BENCH_FRONTIER_MIN (default 2) attempts ran:
-        endpoint probes cannot see a mid-run stall (observed: healthy
-        259/307-probe endpoints around a 101 s prepare phase that takes
-        5 s clean), but a second attempt exposes it,
-      - else repeat up to JIRLBOT_BENCH_FRONTIER_REPEATS (default 3)
-        and keep the fastest attempt.
-
-    Every attempt (timings + probes + bandwidth) appears in the JSON
-    artifact, so a degraded window is visible rather than silently
-    averaged in."""
+    Each attempt carries its wall and tree CPU seconds plus one-shot host
+    stamps: an all-core cpu probe before and after the run and an 8-proc
+    triad memory-bandwidth stamp after it. Every attempt appears in the
+    JSON artifact, so a slow host window is visible rather than silently
+    averaged in; past `deadline` no further attempt starts."""
     repeats = max(
         1, int(os.environ.get("JIRLBOT_BENCH_FRONTIER_REPEATS", "3"))
     )
-    floor = float(os.environ.get("JIRLBOT_PROBE_FLOOR", "150"))
-    healthy = float(os.environ.get("JIRLBOT_BENCH_HEALTHY_PROBE", "230"))
-    healthy_bw = float(
-        os.environ.get("JIRLBOT_BENCH_HEALTHY_MEMBW", "60")
-    )
-    wait_budget = float(os.environ.get("JIRLBOT_BENCH_PROBE_WAIT_S", "90"))
     attempts: list[dict] = []
     best: dict | None = None
     for _ in range(repeats):
-        # a degraded window can stretch one 8M attempt to minutes; the
-        # caller's deadline guarantees a valid JSON line lands before
-        # any outer (driver-side) timeout, best-effort armor beyond it
         if best is not None and deadline is not None and time.time() > deadline:
             break
         pre = cpu_probe(1.0)
-        waited = 0.0
-        while pre < floor and waited < wait_budget:
-            time.sleep(5.0)
-            waited += 6.0
-            pre = cpu_probe(1.0)
         workdir = _mkworkdir("bench_frontier_")
         try:
             res = run_frontier_pipeline(spark, N_URLS, workdir)
         finally:
             shutil.rmtree(workdir, ignore_errors=True)
-        post = cpu_probe(1.0)
-        membw = membw_probe(8, 1.5)
         res["cpu_probe_pre"] = round(pre)
-        res["cpu_probe_post"] = round(post)
-        res["membw_gbs"] = round(membw, 1)
+        res["cpu_probe_post"] = round(cpu_probe(1.0))
+        res["membw_gbs"] = round(membw_probe(8, 1.5), 1)
         attempts.append(
             {
                 "urls_per_sec": round(res["urls_per_sec"], 1),
                 "wall_s": round(res["wall_s"], 2),
+                "cpu_s": round(res["cpu_s"], 2),
                 "timings": {
                     k: round(v, 2) for k, v in res["timings"].items()
                 },
-                "cpu_probe_pre": round(pre),
-                "cpu_probe_post": round(post),
-                "membw_gbs": round(membw, 1),
+                "cpu_probe_pre": res["cpu_probe_pre"],
+                "cpu_probe_post": res["cpu_probe_post"],
+                "membw_gbs": res["membw_gbs"],
             }
         )
         if best is None or res["urls_per_sec"] > best["urls_per_sec"]:
             best = res
-        min_attempts = int(os.environ.get("JIRLBOT_BENCH_FRONTIER_MIN", "2"))
-        if (
-            len(attempts) >= min_attempts
-            and pre >= healthy
-            and post >= healthy
-            and membw >= healthy_bw
-        ):
-            break
     assert best is not None
     return best, attempts
 
@@ -601,9 +550,9 @@ def driver_main() -> None:
 
     spark = get_spark(app_name="bench", master=f"local[{CPUS}]")
     try:
-        # hard wall-clock budget for the whole driver-mode run: the
-        # retry/wait armor must never push past an outer harness
-        # timeout and lose the JSON line entirely
+        # hard wall-clock budget for the whole driver-mode run: repeats
+        # must never push past an outer harness timeout and lose the
+        # JSON line entirely
         t0 = time.time()
         budget = float(os.environ.get("JIRLBOT_BENCH_DEADLINE_S", "480"))
         warmup_pipeline(spark)
@@ -643,6 +592,7 @@ def driver_main() -> None:
                 "n_ranges": r["n_ranges"],
                 "urls_per_sec": round(r["urls_per_sec"], 1),
                 "wall_s": round(r["wall_s"], 2),
+                "cpu_s": round(r["cpu_s"], 2),
                 "n_unique": r["n_unique"],
                 "n_admitted": r["n_admitted"],
                 # None when the deadline left no room for the twin
@@ -677,6 +627,7 @@ def driver_main() -> None:
                         "n_unique": frontier["n_unique"],
                         "n_admitted": frontier["n_admitted"],
                         "wall_s": round(frontier["wall_s"], 2),
+                        "cpu_s": round(frontier["cpu_s"], 2),
                         # host-health context (documented ~4x CPU swings):
                         # healthy windows probe ~250+ M ops/s
                         "cpu_probe_pre": frontier["cpu_probe_pre"],
@@ -688,8 +639,8 @@ def driver_main() -> None:
                             k: round(v, 2)
                             for k, v in frontier["timings"].items()
                         },
-                        # every attempt, incl. degraded-window ones the
-                        # best-of picked over (run_frontier_headline doc)
+                        # every attempt, incl. slow-window ones the
+                        # best-of picked over
                         "attempts": attempts,
                         # one ranged-mode pass (scale mode, r4 verdict
                         # #8); None if the deadline left no room
@@ -703,15 +654,9 @@ def driver_main() -> None:
 
 
 def cpu_probe(seconds: float = 2.0) -> float:
-    """Aggregate integer-op throughput (M ops/s) across all cores.
-
-    This sandbox VM's effective CPU speed fluctuates ~4x over minutes
-    (host-level contention: the same 32-proc busy loop measured 248 vs 53
-    M ops/s an hour apart, with vmstat showing 99% user / ~1% steal both
-    times). Any 8-core vs 32-core comparison taken at different moments is
-    meaningless without calibration, so every scaling trial records this
-    probe and the efficiency verdict uses the median probe-balanced
-    lo/hi combination (max kept as supplementary data)."""
+    """Aggregate integer-op throughput (M ops/s) across all cores: a
+    one-shot stamp of how fast the host is around a run (a shared VM's
+    CPU speed has been seen to swing ~4x over minutes)."""
     return _burn_aggregate(os.cpu_count() or 32, seconds)
 
 
@@ -741,28 +686,11 @@ def _burn_aggregate(nproc: int, seconds: float) -> float:
     return total / seconds / 1e6
 
 
-def cpu_scale_probe(lo: int, hi: int, seconds: float = 1.0) -> tuple[float, float]:
-    """ENGINE-FREE scaling control: aggregate busy-loop Mops/s at `lo`
-    procs then at `hi` procs, back to back. If this pure-Python loop —
-    zero shuffle, zero memory traffic, zero engine — cannot reach
-    ~(hi/lo)x aggregate going lo->hi procs, the host is aggregate-
-    CPU-capped in this window and NO engine can show hi/lo-core scaling;
-    an engine efficiency verdict taken in such a window measures the
-    host, not the code. Recorded per scaling pair so capped windows are
-    visible in the artifact."""
-    return _burn_aggregate(lo, seconds), _burn_aggregate(hi, seconds)
-
-
 def membw_probe(nproc: int, seconds: float = 2.0, mb: int = 256) -> float:
-    """Aggregate DRAM bandwidth (GB/s) of `nproc` concurrent numpy triads.
-
-    The frontier kernels are streaming passes over columnar buffers, so
-    their scaling ceiling is the box's *memory* bandwidth, not core count.
-    Measuring the triad at the lo and hi core counts shows directly how
-    much extra bandwidth the extra cores actually buy on this shared-host
-    VM — on a real cluster, 4x executors bring 4x memory controllers, so
-    the lo-count regime (bandwidth-unsaturated) is the cluster-
-    representative one."""
+    """Aggregate DRAM bandwidth (GB/s) of `nproc` concurrent numpy triads:
+    a one-shot stamp, since the frontier kernels are streaming passes over
+    columnar buffers and a shared host's bandwidth has been seen to be
+    bimodal (~29 vs ~112 GB/s, SCALE.md)."""
     import multiprocessing as mp
 
     import numpy as np
@@ -792,34 +720,8 @@ def membw_probe(nproc: int, seconds: float = 2.0, mb: int = 256) -> float:
     return total / 1e9
 
 
-def _live_bw_sample(seconds: float = 0.35, mb: int = 96) -> float:
-    """One-proc triad GB/s, in-process — the live-bandwidth monitor's
-    single sample. Small buffer + short burst: ~6% duty cycle when run
-    every 5 s, so it observes the box's state during an engine run
-    without materially loading it."""
-    import numpy as np
-
-    n = mb * 1024 * 1024 // 8
-    a = np.ones(n)
-    b = np.ones(n)
-    c = np.empty(n)
-    np.multiply(b, 2.0, out=c)  # fault pages before timing
-    it = 0
-    t0 = time.time()
-    while time.time() - t0 < seconds:
-        np.multiply(b, 2.0, out=c)
-        np.add(c, a, out=c)
-        it += 1
-    return 5 * 8 * n * it / (time.time() - t0) / 1e9
-
-
-def _run_frontier_subprocess(cores: int, n_urls: int | None = None) -> dict:
-    """Run one frontier trial in a subprocess; while it runs, sample the
-    live one-proc triad bandwidth every ~5 s. Post-run snapshot probes
-    proved insufficient (observed: a hi-run at 129k urls/s — SLOWER than
-    its 2-core twin — whose post-run stamp read a healthy 93 GB/s: the
-    host collapsed during the run and recovered before the stamp). The
-    in-run samples are what certify the window the run actually saw."""
+def _run_frontier_subprocess(cores: int, n_urls: int) -> dict:
+    """One `--frontier-only` trial at `cores` in a fresh subprocess."""
     env = dict(os.environ)
     tmpl = os.environ.get("JIRLBOT_SCALING_MASTER_TMPL")
     if tmpl:
@@ -845,51 +747,33 @@ def _run_frontier_subprocess(cores: int, n_urls: int | None = None) -> dict:
     else:
         env["SPARK_MASTER"] = f"local[{cores}]"
         env["SPARK_SHUFFLE_PARTITIONS"] = str(max(cores * 2, 16))
-    if n_urls is not None:
-        env["JIRLBOT_BENCH_N"] = str(n_urls)
-    proc = subprocess.Popen(
+    env["JIRLBOT_BENCH_N"] = str(n_urls)
+    # run() kills the trial if it outlives the timeout
+    out = subprocess.run(
         [sys.executable, __file__, "--frontier-only"],
-        stdout=subprocess.PIPE,
-        stderr=subprocess.PIPE,
+        capture_output=True,
         text=True,
         env=env,
+        timeout=3600,
     )
-    samples = []
-    deadline = time.time() + 3600
-    while proc.poll() is None and time.time() < deadline:
-        time.sleep(5.0)
-        if proc.poll() is None:
-            samples.append(round(_live_bw_sample(), 1))
-    if proc.poll() is None:
-        proc.kill()
-    stdout, _ = proc.communicate(timeout=120)
-    line = [ln for ln in stdout.splitlines() if ln.startswith("{")][-1]
-    res = json.loads(line)
-    # warmup pass runs first inside the subprocess; keep only the tail
-    # half of the samples if the run is long enough to matter — the timed
-    # pipeline dominates the end of the subprocess lifetime. Simpler and
-    # honest: report all samples plus the median of ALL of them; the
-    # warmup does the same streaming work, so its window health is
-    # equally informative.
-    res["live_bw_samples"] = samples
-    # lower quartile, not median: a window that collapses for a third of
-    # the run still poisons the timing, and the median would forgive it
-    res["live_bw_med"] = (
-        round(sorted(samples)[max(0, (len(samples) - 1) // 4)], 1)
-        if samples
-        else 0.0
-    )
-    return res
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
+    if not lines:
+        raise RuntimeError(
+            f"--frontier-only at {cores} exited {out.returncode} with no "
+            f"result line; stderr tail:\n{out.stderr[-2000:]}"
+        )
+    return json.loads(lines[-1])
 
 
 def scaling_main() -> None:
-    """Same job, same input, local[8] vs local[32] (BASELINE.md protocol).
+    """Same job, same input, N vs 4N cores (BASELINE.md protocol).
 
-    Runs K interleaved (8, 32) pairs, each trial preceded by a CPU-speed
-    probe; reports every trial and takes the efficiency verdict from the
-    best pair — the pair least damaged by host-level CPU contention (see
-    cpu_probe docstring). Each subprocess does one warmup pass before its
-    timed run, so numbers are steady-state."""
+    Runs JIRLBOT_SCALING_PAIRS (default 3) interleaved (lo, hi) trials,
+    each in a fresh subprocess that does one warmup pass before its timed
+    run, so numbers are steady-state. The verdict is the median of the
+    pairs' efficiencies. Every run reports wall and tree CPU seconds and
+    their ratio to the cores it had (`cpu_util`): a contended window
+    shows up as low utilization, not as a silent gap."""
     pairs = int(os.environ.get("JIRLBOT_SCALING_PAIRS", "3"))
     # scaling runs use a larger frontier than driver mode: the serial
     # fraction (job scheduling, commit protocol, session fixed costs,
@@ -902,194 +786,81 @@ def scaling_main() -> None:
     )
     factor = hi / lo
     # executor mode (JIRLBOT_SCALING_MASTER_TMPL, e.g.
-    # local-cluster[{n},1,6144]): lo/hi count EXECUTOR JVMs, not local
-    # threads; the engine-free host controls then probe n×cores_per_exec
-    # procs so the ceilings match the engine's actual core footprint.
+    # local-cluster[{n},1,6144]): lo/hi count EXECUTOR JVMs of
+    # JIRLBOT_SCALING_CORES_PER_EXEC cores each, not local threads
     tmpl = os.environ.get("JIRLBOT_SCALING_MASTER_TMPL")
     cpe = (
         int(os.environ.get("JIRLBOT_SCALING_CORES_PER_EXEC", "1"))
         if tmpl
         else 1
     )
-    lo_p, hi_p = lo * cpe, hi * cpe
 
     def label(c: int) -> str:
         return tmpl.format(n=c) if tmpl else f"local[{c}]"
 
-    membw = {
-        lo: round(membw_probe(lo_p), 1),
-        hi: round(membw_probe(hi_p), 1),
-    }
-    print(f"membw triad: {lo} procs = {membw[lo]} GB/s, "
-          f"{hi} procs = {membw[hi]} GB/s "
-          f"(ratio {membw[hi] / max(membw[lo], 0.1):.2f}x for {factor:g}x procs)")
-    # Trials only start when the host looks healthy: a pre-trial probe
-    # below the floor means the box is in a contention trough where NO
-    # core count can show its real speed (observed: both 8- and 32-core
-    # runs collapse to the same throughput at probe ~45) — wait for a
-    # better window instead of recording noise.
-    probe_floor = float(os.environ.get("JIRLBOT_PROBE_FLOOR", "150"))
     trials = []
     for i in range(pairs):
         pair = {}
-        # wait (bounded) for a window where the engine-free control can
-        # scale at all — a capped window proves nothing about the engine
-        for _attempt in range(8):
-            bl_lo, bl_hi = cpu_scale_probe(lo_p, hi_p, 1.0)
-            pair["busyloop_scale"] = bl_hi / max(bl_lo, 1.0)
-            print(
-                f"pair {i} busyloop control: {bl_lo:.0f} Mops @{lo}p -> "
-                f"{bl_hi:.0f} Mops @{hi}p ({pair['busyloop_scale']:.2f}x of "
-                f"{factor:g}x ideal)",
-                flush=True,
-            )
-            if pair["busyloop_scale"] >= 0.6 * factor:
-                break
-            print("host aggregate-capped; waiting for a usable window")
-            time.sleep(60)
-        # per-pair memory-bandwidth control AND gate: the frontier
-        # kernels are streaming passes, so a window where DRAM bandwidth
-        # stops scaling with procs caps the ENGINE even while the ALU
-        # probe and busyloop control look healthy (observed: 1.06x engine
-        # scaling at busyloop 3.96x — bandwidth was the collapsed axis).
-        # Like the busyloop gate above, a collapsed window proves nothing
-        # about the engine — wait (bounded) for bandwidth to scale.
-        membw_floor = float(
-            os.environ.get("JIRLBOT_MEMBW_FLOOR", str(0.7 * factor))
-        )
-        for _attempt in range(8):
-            pair["membw_lo"] = round(membw_probe(lo_p, 1.5), 1)
-            pair["membw_hi"] = round(membw_probe(hi_p, 1.5), 1)
-            pair["membw_scale"] = pair["membw_hi"] / max(pair["membw_lo"], 0.1)
-            print(
-                f"pair {i} membw control: {pair['membw_lo']} GB/s @{lo}p -> "
-                f"{pair['membw_hi']} GB/s @{hi}p "
-                f"({pair['membw_scale']:.2f}x of {factor:g}x ideal)",
-                flush=True,
-            )
-            if pair["membw_scale"] >= membw_floor:
-                break
-            print("host bandwidth-capped; waiting for a usable window")
-            time.sleep(60)
         for cores in (lo, hi):
-            for _attempt in range(10):
-                pre = cpu_probe()
-                if pre >= probe_floor:
-                    break
-                print(f"probe {pre:.0f} < floor {probe_floor:.0f}; waiting")
-                time.sleep(45)
             res = _run_frontier_subprocess(cores, n_urls)
-            post = cpu_probe()
-            res["cpu_probe_mops"] = round((pre + post) / 2, 0)
-            res["cpu_probe_pre"] = round(pre, 0)
-            res["cpu_probe_post"] = round(post, 0)
-            # bandwidth stamp taken right AFTER the run, at the run's own
-            # core count: the pre-pair gate can pass and the window still
-            # collapse mid-run (observed repeatedly) — this stamp lets the
-            # verdict reject combinations whose hi-run finished in a
-            # bandwidth-collapsed window
-            res["membw_post"] = round(membw_probe(cores * cpe, 1.0), 1)
+            res["cpu_util"] = res["cpu_s"] / (res["wall_s"] * cores * cpe)
             pair[cores] = res
             print(
                 f"pair {i} {label(cores)}: {res['urls_per_sec']:.0f} urls/s "
-                f"(probe {pre:.0f}->{post:.0f} Mops/s, "
-                f"membw_post {res['membw_post']} GB/s, "
-                f"live_bw {res['live_bw_samples']} med "
-                f"{res['live_bw_med']} GB/s)"
+                f"(wall {res['wall_s']:.2f} s, cpu {res['cpu_s']:.2f} s, "
+                f"util {res['cpu_util']:.2f})",
+                flush=True,
             )
         pair["efficiency"] = (
             pair[hi]["urls_per_sec"] / pair[lo]["urls_per_sec"]
         ) / factor
         trials.append(pair)
 
-    # Verdict pair: host contention swings CPU speed ~4x between trials,
-    # so an efficiency computed from a slow-moment lo-run and a fast-moment
-    # hi-run is fiction (it can exceed 1.0). Cross-match every lo-run with
-    # every hi-run, keep only probe-BALANCED combinations (speeds within
-    # 20% of each other), and report the MEDIAN efficiency among those as
-    # the verdict (the max would still favor a lucky-but-within-20% hi
-    # run; it is reported as supplementary data only).
-    lo_runs = [t[lo] for t in trials]
-    hi_runs = [t[hi] for t in trials]
-    candidates = []
-    for lr in lo_runs:
-        for hr in hi_runs:
-            pl, ph = lr["cpu_probe_mops"], hr["cpu_probe_mops"]
-            ratio = ph / max(pl, 1.0)
-            eff = (hr["urls_per_sec"] / lr["urls_per_sec"]) / factor
-            candidates.append(
-                {"lo": lr, "hi": hr, "probe_ratio": ratio, "eff": eff}
-            )
-    balanced = [c for c in candidates if 1 / 1.2 <= c["probe_ratio"] <= 1.2]
-    if not balanced:  # fall back to the most probe-balanced combination
-        balanced = [min(candidates, key=lambda c: abs(c["probe_ratio"] - 1))]
-    # bandwidth-credible tier: BOTH runs' in-run live-bandwidth monitor
-    # (one-proc triad sampled every 5 s DURING the run) must have seen a
-    # non-collapsed window. Absolute floor, not a ratio: during collapse
-    # the monitor reads 2-4 GB/s (total box bandwidth ~15-30 GB/s shared
-    # with the engine); on a healthy box it reads >=8-20 even while the
-    # engine streams. Post-run snapshots proved insufficient — see
-    # _run_frontier_subprocess docstring.
-    live_floor = float(os.environ.get("JIRLBOT_LIVE_BW_FLOOR", "6.0"))
-    credible = [
-        c
-        for c in balanced
-        if c["hi"].get("live_bw_med", 0.0) >= live_floor
-        and c["lo"].get("live_bw_med", 0.0) >= live_floor
-    ]
-    verdict_tier = "probe+bandwidth-balanced" if credible else "probe-balanced"
-    verdict_set = credible or balanced
-    by_eff = sorted(verdict_set, key=lambda c: c["eff"])
-    bestc = by_eff[len(by_eff) // 2]  # median of the verdict tier
-    max_eff = by_eff[-1]["eff"]
     effs = [round(t["efficiency"], 3) for t in trials]
-    balanced_effs = sorted(round(c["eff"], 3) for c in balanced)
-    credible_effs = sorted(round(c["eff"], 3) for c in credible)
+    verdict = statistics.median(t["efficiency"] for t in trials)
+
+    def runs(c: int) -> list[dict]:
+        return [
+            {
+                **{
+                    k: round(t[c][k], 3)
+                    for k in ("urls_per_sec", "wall_s", "cpu_s", "cpu_util")
+                },
+                "timings": {
+                    k: round(v, 2) for k, v in t[c]["timings"].items()
+                },
+            }
+            for t in trials
+        ]
+
     report = {
         "n_urls": n_urls,
         "cores": [lo, hi],
-        f"throughput_{lo}": round(bestc["lo"]["urls_per_sec"], 1),
-        f"throughput_{hi}": round(bestc["hi"]["urls_per_sec"], 1),
-        "efficiency": round(bestc["eff"], 3),
-        "verdict_tier": verdict_tier,
-        "max_balanced_efficiency": round(max_eff, 3),
-        "balanced_efficiencies": balanced_effs,
-        "bandwidth_credible_efficiencies": credible_effs,
+        f"throughput_{lo}": round(
+            statistics.median(t[lo]["urls_per_sec"] for t in trials), 1
+        ),
+        f"throughput_{hi}": round(
+            statistics.median(t[hi]["urls_per_sec"] for t in trials), 1
+        ),
+        "efficiency": round(verdict, 3),
         "interleaved_pair_efficiencies": effs,
-        "membw_gbps": membw,
-        f"timings_{lo}": bestc["lo"]["timings"],
-        f"timings_{hi}": bestc["hi"]["timings"],
+        f"runs_{lo}": runs(lo),
+        f"runs_{hi}": runs(hi),
         "masters": [label(lo), label(hi)],
     }
     print(json.dumps(report))
     os.makedirs("BENCH", exist_ok=True)
     rows = "\n".join(
-        f"| {i} | {t[lo]['urls_per_sec']:,.0f} | {t[lo]['cpu_probe_mops']:.0f} "
-        f"| {t[hi]['urls_per_sec']:,.0f} | {t[hi]['cpu_probe_mops']:.0f} "
-        f"| {t['busyloop_scale']:.2f}x "
-        f"| {t.get('membw_scale', 0.0):.2f}x "
-        f"| {t[lo].get('live_bw_med', 0.0):.0f}/{t[hi].get('live_bw_med', 0.0):.0f} "
+        f"| {i} | {t[lo]['urls_per_sec']:,.0f} | {t[lo]['wall_s']:.2f} "
+        f"| {t[lo]['cpu_s']:.2f} | {t[lo]['cpu_util']:.2f} "
+        f"| {t[hi]['urls_per_sec']:,.0f} | {t[hi]['wall_s']:.2f} "
+        f"| {t[hi]['cpu_s']:.2f} | {t[hi]['cpu_util']:.2f} "
         f"| {t['efficiency']:.3f} |"
         for i, t in enumerate(trials)
     )
-    capped = [
-        i
-        for i, t in enumerate(trials)
-        if t["busyloop_scale"] < 0.6 * factor
-    ]
-    capped_note = (
-        (
-            f" Pairs {capped} ran in HOST-CAPPED windows: the engine-free "
-            f"busyloop control itself scaled <{0.6 * factor:.1f}x there, so "
-            f"no engine could show {factor:g}x — those windows measure the "
-            f"host, not the code."
-        )
-        if capped
-        else ""
-    )
     exec_note = (
         (
-            f" EXECUTOR MODE: lo/hi count separate executor JVMs "
+            f"EXECUTOR MODE: lo/hi count separate executor JVMs "
             f"({cpe} core(s) each) under Spark's local-cluster manager — "
             f"real Netty shuffle fetches between executor processes, "
             f"per-executor Python workers, and the package arriving via "
@@ -1102,63 +873,32 @@ def scaling_main() -> None:
     section = (
         f"## {label(lo)} vs {label(hi)} — {n_urls:,} URLs\n\n"
         f"{exec_note}"
-        f"Triad memory bandwidth at trial time: {membw[lo]} GB/s aggregate "
-        f"with {lo} procs, {membw[hi]} GB/s with {hi} procs — "
-        f"{membw[hi] / max(membw[lo], 0.1):.2f}x for {factor:g}x procs. "
-        f"When this ratio is far below {factor:g}x, the box cannot show "
-        f"{factor:g}x compute scaling for streaming kernels regardless of "
-        f"engine quality; a 4x-executor cluster brings 4x memory "
-        f"controllers.\n\n"
-        f"| pair | thr@{lo} (urls/s) | probe@{lo} | thr@{hi} (urls/s) | "
-        f"probe@{hi} | busyloop@{lo}->{hi} | membw@{lo}->{hi} | "
-        f"live_bw@{lo}/@{hi} | efficiency |\n"
-        "| --- | --- | --- | --- | --- | --- | --- | --- | --- |\n"
+        f"{pairs} interleaved ({lo}, {hi}) pairs, no gates and no waits. "
+        f"Each run reports wall seconds, `cpu` = user+system CPU seconds "
+        f"of its whole process tree (driver, JVM, Python workers; read "
+        f"from /proc, steal time excluded) and `util` = cpu / (wall × "
+        f"cores). A run in a contended host window shows up as low "
+        f"utilization next to its throughput. JVM GC and JIT threads run "
+        f"beside the task threads, so util can exceed 1 at a small core "
+        f"count.\n\n"
+        f"| pair | thr@{lo} (urls/s) | wall@{lo} | cpu@{lo} | util@{lo} "
+        f"| thr@{hi} (urls/s) | wall@{hi} | cpu@{hi} | util@{hi} "
+        f"| efficiency |\n"
+        "| --- | --- | --- | --- | --- | --- | --- | --- | --- | --- |\n"
         f"{rows}\n\n"
-        f"busyloop and membw are the ENGINE-FREE controls, measured "
-        f"immediately before each pair: aggregate pure-Python busy-loop "
-        f"Mops/s (ALU ceiling) and aggregate numpy-triad GB/s (DRAM "
-        f"bandwidth ceiling) at {lo} then {hi} procs — the host's actual "
-        f"{factor:g}x-proc scaling ceilings in that window, independent "
-        f"of Spark. The frontier kernels are streaming passes, so the "
-        f"membw ceiling is usually the binding one. live_bw is the "
-        f"IN-RUN monitor: a one-proc triad sampled every 5 s DURING each "
-        f"timed run (median shown) — pre-pair gates and post-run stamps "
-        f"both miss windows that collapse mid-run and recover, which "
-        f"this catches; collapse reads 2-4 GB/s, health >=8 even while "
-        f"the engine streams.\n\n"
-        f"**Scaling efficiency** (MEDIAN {verdict_tier} lo/hi combination; "
-        f"probes within 20%, both runs' in-run live bandwidth >= "
-        f"{live_floor:.0f} GB/s) = (thr_{hi}/thr_{lo})/{factor:g} "
-        f"= **{bestc['eff']:.3f}** (target >= 0.8 per north rule). "
-        f"Bandwidth-credible combinations: {credible_effs}; "
-        f"all probe-balanced combinations: {balanced_effs} "
-        f"(max {max_eff:.3f}, supplementary); "
-        f"raw interleaved pairs (incl. contaminated): {effs}."
-        f"{capped_note}\n\n"
-        f"Verdict-pair phase timings (s):\n\n"
-        f"- {label(lo)}: {json.dumps({k: round(v, 2) for k, v in bestc['lo']['timings'].items()})}\n"
-        f"- {label(hi)}: {json.dumps({k: round(v, 2) for k, v in bestc['hi']['timings'].items()})}\n"
+        f"**Scaling efficiency** (median of the pairs' "
+        f"(thr_{hi}/thr_{lo})/{factor:g}) = **{verdict:.3f}** "
+        f"(target >= 0.8 per north rule); pairs: {effs}.\n"
     )
     header = (
         "# BENCH — scaling evidence (same job, same input, N vs 4N cores)\n\n"
         "Protocol per BASELINE.md: the frontier pipeline (canonicalize → "
         "murmur3 → DRUM dedup vs 25%-populated seen table → salted BEAST "
         "admission → politeness schedule) on a deterministic dirty-URL "
-        "frontier with 20% hot-PLD skew, run at two parallelism levels on "
-        "the 32-core sandbox box. Steady-state timing (one warmup pass per "
-        "trial amortizes JVM JIT + Python worker spin-up, as in a "
-        "long-running crawl).\n\n"
-        "Measurement hygiene: this VM's effective CPU speed fluctuates "
-        "~4x with host-level contention (probe column: aggregate "
-        "all-core M int-ops/s measured immediately before each trial; "
-        "the same busy loop measured 248 vs 53 M ops/s an hour apart at "
-        "99% user CPU). Trials are therefore interleaved (lo,hi) runs, "
-        "and the verdict uses the MEDIAN PROBE-BALANCED lo/hi combination "
-        "(probe speeds within 20% of each other; the max is supplementary "
-        "data only) — an efficiency computed "
-        "from a slow-moment lo-run and a fast-moment hi-run is fiction "
-        "(it can exceed 1.0; such contaminated pairs are shown but never "
-        "used for the verdict). All trials are shown.\n\n"
+        "frontier with 20% hot-PLD skew, run at two parallelism levels. "
+        "Steady-state timing (one warmup pass per trial amortizes JVM JIT "
+        "+ Python worker spin-up, as in a long-running crawl). All trials "
+        "are shown.\n\n"
         "Shuffle goes to node-local tmpfs (`spark.local.dir=/dev/shm/...`):"
         " a multi-executor cluster shuffles to per-node disks whose "
         "aggregate bandwidth scales with the cluster, while this one-box "
@@ -1166,11 +906,9 @@ def scaling_main() -> None:
         "shuffle-heavy stages and misattribute the bottleneck.\n\n"
     )
     path = "BENCH/BASELINE.md"
-    # APPEND-ONLY by default (r5 review): the file is the cumulative
-    # scaling record across rounds and its own protocol text promises
-    # "All trials are shown" — a silent overwrite (the old default
-    # unless JIRLBOT_SCALING_APPEND=1) curated away below-bar history.
-    # Overwriting now requires the explicit opt-out.
+    # APPEND-ONLY by default: the file is the cumulative scaling record
+    # across rounds and its protocol text promises "All trials are
+    # shown"; rewriting it requires JIRLBOT_SCALING_OVERWRITE=1.
     if os.path.exists(path) and os.environ.get(
         "JIRLBOT_SCALING_OVERWRITE"
     ) != "1":
@@ -1184,8 +922,9 @@ def scaling_main() -> None:
 def loop_main() -> None:
     """Full crawl-loop pages/s (one JSON line). Separate from driver mode
     because the geometric frontier growth takes minutes at the scale
-    where per-batch orchestration overhead (~10 Spark actions/batch for
-    robots gating, metrics, atomic commit) amortizes."""
+    where per-batch orchestration overhead amortizes (a traced 50-site
+    batch runs ~50 Spark jobs: robots gating, fetch and verify, link
+    dedup, metrics, the atomic commit)."""
     from jirlbot_spark.session import get_spark
 
     spark = get_spark(
@@ -1193,9 +932,8 @@ def loop_main() -> None:
     )
     n_sites = int(os.environ.get("JIRLBOT_LOOP_SITES", "20000"))
     n_batches = int(os.environ.get("JIRLBOT_LOOP_BATCHES", "5"))
-    # window-health stamps (same contract as the frontier headline):
-    # a 10-minute loop run spans multiple host windows, so the artifact
-    # must say what the box looked like around it
+    # one-shot host stamps around the run (as in the frontier headline);
+    # cpu_s in the result is the tree's CPU time
     pre = cpu_probe(1.0)
     bw_pre = membw_probe(8, 1.5)
     res = run_loop_bench(spark, n_sites=n_sites, n_batches=n_batches)

@@ -382,20 +382,24 @@ class CrawlLoop:
         )
 
     def ingest_seeds(self, seeds: DataFrame, url_col: str = "url") -> int:
-        """Batch 0: canonicalize + dedup seeds into the frontier."""
-        return self._ingest(seeds, 0, url_col).count()
+        """Batch 0: canonicalize + dedup seeds into the frontier. Returns
+        the number of fresh seeds: the committed url_seen run holds one
+        key per fresh row, and its row count is store metadata, so the
+        seed prepare and the DRUM join do not run a second time."""
+        run = self._ingest(seeds, 0, url_col).get("url_seen")
+        return 0 if run is None else self.store.run_rows("url_seen", run)
 
     def _ingest(
         self, seeds: DataFrame, batch_id: int, url_col: str = "url"
-    ) -> DataFrame:
+    ) -> dict[str, str]:
         """Seed ingest as its own DRUM check_update, committed as batch
         `batch_id` (commit_batch rejects an id already committed); the
         fresh rows, due at batch_id + 1, join the committed frontier when
-        one exists. Returns the fresh rows."""
+        one exists. Returns commit_batch's runs written."""
         prepared = self._prepare_urls(seeds, url_col, None, 0)
         fresh, uniques = self._dedup_new(prepared, batch_id + 1)
         frontier = self.store.read("frontier")
-        self.store.commit_batch(
+        return self.store.commit_batch(
             batch_id,
             {
                 "frontier": TableWrite(
@@ -406,7 +410,6 @@ class CrawlLoop:
             },
             pre_commit=self._update_bloom,
         )
-        return fresh
 
     def _update_bloom(self, runs: dict[str, str]) -> None:
         """OR the batch's new url_seen run into the Bloom sidecars. Runs

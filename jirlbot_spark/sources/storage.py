@@ -115,6 +115,11 @@ class TableStore:
             out = out.unionByName(d)
         return out
 
+    def run_rows(self, name: str, run: str) -> int:
+        """Rows in one written run of `name` (a `commit_batch` result),
+        from parquet footers: no Spark job."""
+        return _parquet_rows(os.path.join(self.root, name, run))
+
     # ---- atomic batch commit ----
     def commit_batch(
         self,
@@ -367,6 +372,14 @@ class IcebergTableStore(TableStore):
         return self.spark.read.option("snapshot-id", int(snap[0])).table(
             self._tbl(name)
         )
+
+    def run_rows(self, name: str, run: str) -> int:
+        """Rows one snapshot added, from its summary: no data scan."""
+        rows = self.spark.sql(
+            f"SELECT summary['added-records'] FROM {self._tbl(name)}"
+            f".snapshots WHERE snapshot_id = {int(run)}"
+        ).collect()
+        return int(rows[0][0] or 0)
 
     def commit_batch(
         self,

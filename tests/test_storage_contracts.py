@@ -56,7 +56,8 @@ class FakeWarehouse:
         snap = {
             "id": self._next_id,
             "committed_at": self._clock,
-            "summary": dict(props),
+            # Iceberg stamps every snapshot with its added row count
+            "summary": {**props, "added-records": str(len(rows))},
             "state": base + list(rows),
         }
         self._next_id += 1
@@ -139,6 +140,10 @@ _Q_BY_BATCH = re.compile(
     r"WHERE summary\['jirlbot\.batch-id'\] = '(\d+)' "
     r"ORDER BY committed_at DESC LIMIT 1"
 )
+_Q_ADDED = re.compile(
+    r"SELECT summary\['added-records'\] FROM (\S+)\.snapshots "
+    r"WHERE snapshot_id = (\d+)"
+)
 _Q_LAST = re.compile(
     r"SELECT snapshot_id FROM (\S+)\.snapshots "
     r"ORDER BY committed_at DESC LIMIT 1"
@@ -174,6 +179,14 @@ class FakeIcebergSpark:
             ]
             hits.sort(key=lambda s: -s["committed_at"])
             return _Result([(hits[0]["id"],)] if hits else [])
+        m = _Q_ADDED.match(q)
+        if m:
+            tbl, sid = m.group(1), int(m.group(2))
+            return _Result([
+                (s["summary"]["added-records"],)
+                for s in self._wh.snapshots(tbl)
+                if s["id"] == sid
+            ])
         m = _Q_LAST.match(q)
         if m:
             snaps = self._wh.snapshots(m.group(1))
@@ -231,6 +244,20 @@ def test_iceberg_commit_pins_snapshots_and_time_travels(tmp_path):
         "snapshot-property.jirlbot.batch-id", "2"
     ).append()
     assert sorted(store.read("url_seen").rows) == [(1,), (2,), (3,)]
+
+
+def test_iceberg_run_rows_reads_snapshot_summary(tmp_path):
+    """`run_rows` is the rows one commit's snapshot added (what
+    `CrawlLoop.ingest_seeds` returns), not the table's running total."""
+    wh, store = _mk_store(tmp_path)
+    runs0 = store.commit_batch(
+        0, {"url_seen": TableWrite(FakeDF(wh, [(1,), (2,)]))}
+    )
+    runs1 = store.commit_batch(
+        1, {"url_seen": TableWrite(FakeDF(wh, [(3,), (4,), (5,)]))}
+    )
+    assert store.run_rows("url_seen", runs0["url_seen"]) == 2
+    assert store.run_rows("url_seen", runs1["url_seen"]) == 3
 
 
 def test_iceberg_empty_append_keeps_old_pin(tmp_path):

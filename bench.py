@@ -259,7 +259,7 @@ def run_frontier_pipeline(
 
     # phase 3: STAR budgets (synthetic indegree), salted BEAST admission,
     # politeness schedule. Budgets stay GLOBAL in ranged mode (small
-    # map-side-combined agg, cached once); BEAST + politeness range on
+    # map-side-combined agg, materialized once); BEAST + politeness range on
     # pld_hash — a host belongs to one PLD, so every ranking and every
     # per-host window is whole inside its pass.
     t0 = time.time()
@@ -279,8 +279,7 @@ def run_frontier_pipeline(
         deg, top_k=10_000, b_hi=10_000, b_lo=10
     ).select("pld_hash", "budget")
     if n_ranges > 1:
-        budgets = budgets.cache()
-        budgets.count()  # materialize once, reuse across passes
+        budgets = materialize(budgets, "bench-budgets")  # reused per pass
         n_admitted = 0
         for r in range(n_ranges):
             subf = fresh.filter(F.pmod("pld_hash", F.lit(n_ranges)) == r)
@@ -296,7 +295,6 @@ def run_frontier_pipeline(
             n_admitted += sched.count()
             del subf, enforced, admitted, _deferred, sched
             _reclaim_shuffle(spark)
-        budgets.unpersist()
     else:
         enforced = beast_enforce(
             fresh.withColumn("enqueue_batch", F.lit(0)),
@@ -687,10 +685,10 @@ def _burn_aggregate(nproc: int, seconds: float) -> float:
 
 
 def membw_probe(nproc: int, seconds: float = 2.0, mb: int = 256) -> float:
-    """Aggregate DRAM bandwidth (GB/s) of `nproc` concurrent numpy triads:
-    a one-shot stamp, since the frontier kernels are streaming passes over
-    columnar buffers and a shared host's bandwidth has been seen to be
-    bimodal (~29 vs ~112 GB/s, SCALE.md)."""
+    """Aggregate DRAM bandwidth (GB/s) of up to `nproc` concurrent numpy
+    triads, one per core at most: a one-shot stamp, since the frontier
+    kernels are streaming passes over columnar buffers and a shared host's
+    bandwidth has been seen to be bimodal (~29 vs ~112 GB/s, SCALE.md)."""
     import multiprocessing as mp
 
     import numpy as np
@@ -711,6 +709,7 @@ def membw_probe(nproc: int, seconds: float = 2.0, mb: int = 256) -> float:
         q.put(5 * 8 * n * it / dt)
 
     q = mp.Queue()
+    nproc = min(nproc, os.cpu_count() or 1)
     ps = [mp.Process(target=triad, args=(q, seconds)) for _ in range(nproc)]
     for p in ps:
         p.start()

@@ -15,6 +15,10 @@ ATOMICALLY via one manifest rename (TableStore.commit_batch) — crash
 anywhere re-runs batch j from identical inputs (exact resume, north
 rule). The robots table doubles as the reference's RobotsRequested set:
 a host's rules commit in the same batch that first requests them.
+The writes run as concurrent queries, so each frame several of them
+read is cut once, with session.materialize, where it is built: the
+frontier as read, the robots-checked rows, the fetched rows, the
+prepared links and DRUM's fresh rows.
 
 Determinism contract (crawl-order equivalence vs tests/oracle_sim.py):
 ordering is always (priority asc, url_hash asc); priority = discovery
@@ -46,6 +50,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from jirlbot_spark.functions.hashing import bucket_col
 from jirlbot_spark.functions.prepare import prepare_urls_fused
 from jirlbot_spark.operators import robots as robots_ops
 from jirlbot_spark.operators.beast import beast_enforce, split_admitted
@@ -81,23 +86,21 @@ FRONTIER_SCHEMA = StructType(
 
 def throttle_frontier(
     frontier: DataFrame, max_urls: int, num_buckets: int
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Backpressure split: (ranked, admitted, overflow).
+) -> DataFrame:
+    """Backpressure mark: `frontier` plus a boolean `__admit` column.
 
     Admits each DRUM bucket's ceil(max_urls/num_buckets) best
     (priority asc, url_hash asc) rows via a bucket-partitioned window —
     the O20 top-k shape, never a global sort or single-partition window
     (plan-asserted in PLANS.md) — so one pass's candidate set is bounded
-    by ~max_urls while overflow re-queues untouched. `ranked` is the
-    shared parent; callers cache it so the two filters scan once."""
+    by ~max_urls while overflow re-queues untouched. Lazy: the caller
+    materializes the marked frame once and splits the admitted rows
+    from the overflow on `__admit`."""
     k = -(-max_urls // num_buckets)
     w = Window.partitionBy(
         F.pmod(F.col("url_hash"), F.lit(num_buckets))
     ).orderBy(F.asc("priority"), F.asc("url_hash"))
-    ranked = frontier.withColumn("__rn", F.row_number().over(w))
-    admitted = ranked.filter(F.col("__rn") <= k).drop("__rn")
-    overflow = ranked.filter(F.col("__rn") > k).drop("__rn")
-    return ranked, admitted, overflow
+    return frontier.withColumn("__admit", F.row_number().over(w) <= k)
 
 
 # Adaptive politeness reads this many past batches of fetch_log.
@@ -284,9 +287,14 @@ class CrawlLoop:
         return revisit.select(*[f.name for f in FRONTIER_SCHEMA.fields])
 
     def _dedup_new(self, prepared: DataFrame, batch_id: int) -> tuple[DataFrame, DataFrame]:
-        """DRUM check_update: returns (new frontier rows, new url_seen keys)."""
+        """DRUM check_update: returns (new frontier rows, new url_seen keys).
+
+        The fresh rows are materialized: the frontier and url_seen
+        writes commit as concurrent queries, and each would otherwise
+        re-run the prepare (a Python mapInArrow) and the DRUM join. The
+        url_seen keys are read from the materialized rows."""
         seen = self.store.read("url_seen")
-        fresh, uniques = check_update_agg(
+        fresh, _ = check_update_agg(
             prepared,
             seen,
             key_col="url_hash",
@@ -302,10 +310,17 @@ class CrawlLoop:
                 else None
             ),
         )
-        fresh = fresh.drop("__seq").withColumn(
-            "enqueue_batch", F.lit(batch_id).cast("int")
+        fresh = materialize(
+            fresh.withColumn(
+                "enqueue_batch", F.lit(batch_id).cast("int")
+            ).select(*[f.name for f in FRONTIER_SCHEMA.fields]),
+            "loop-fresh",
         )
-        return fresh.select(*[f.name for f in FRONTIER_SCHEMA.fields]), uniques
+        uniques = fresh.select(
+            "url_hash",
+            bucket_col("url_hash", self.cfg.num_buckets).alias("bucket"),
+        )
+        return fresh, uniques
 
     def _bucket_key_epochs(self) -> dict[int, int]:
         """bucket -> last committed batch that appended url_seen keys for
@@ -464,6 +479,15 @@ class CrawlLoop:
                     if frontier is None
                     else frontier.unionByName(revisit)
                 )
+        # backpressure: per-bucket windowed top-k (the O20 shape — never a
+        # global sort/limit) marks the pass's candidates; overflow rides
+        # to the next frontier untouched (cfg.max_urls_per_batch docstring
+        # pins the bound)
+        cap = cfg.max_urls_per_batch
+        if frontier is not None:
+            if cap is not None:
+                frontier = throttle_frontier(frontier, cap, cfg.num_buckets)
+            frontier = materialize(frontier, "loop-frontier")
         if frontier is None or not frontier.head(1):
             # with recrawl on, an empty batch is IDLE, not done — pages
             # keep aging toward their next revisit (run() keeps going)
@@ -474,23 +498,10 @@ class CrawlLoop:
                 "done": cfg.recrawl_threshold is None,
                 "idle": cfg.recrawl_threshold is not None,
             }
-        # backpressure: per-bucket windowed top-k (the O20 shape — never a
-        # global sort/limit) splits the pass's candidates from overflow,
-        # which rides to the next frontier untouched (cfg.max_urls_per_batch
-        # docstring pins the bound)
         overflow = None
-        ranked = None
-        if cfg.max_urls_per_batch is not None:
-            ranked, frontier, overflow = throttle_frontier(
-                frontier, cfg.max_urls_per_batch, cfg.num_buckets
-            )
-            # cache ONLY the shared ranked parent: the admitted subset
-            # reads through it (caching it separately would hold every
-            # admitted row in executor storage twice)
-            ranked = ranked.cache()
-        else:
-            frontier = frontier.cache()
-        rows_in = frontier.count()
+        if cap is not None:
+            overflow = frontier.filter(~F.col("__admit")).drop("__admit")
+            frontier = frontier.filter("__admit").drop("__admit")
 
         # STAR budgets from the pld graph as of the last commit
         pld_graph = self.store.read("pld_graph")
@@ -520,14 +531,15 @@ class CrawlLoop:
         admitted = admitted.withColumn(
             "path", F.when(path == "", "/").otherwise(path)
         )
-        checked = robots_ops.robots_check(admitted, robots).cache()
+        checked = materialize(
+            robots_ops.robots_check(admitted, robots), "loop-checked"
+        )
         passed = checked.filter(F.col("robots_status") == "PASS").drop(
             "robots_status", "path"
         )
         deferred_robots = checked.filter(
             F.col("robots_status") == "UNKNOWN"
         ).drop("robots_status", "path")
-        blocked = checked.filter(F.col("robots_status") == "FAIL")
 
         # fetch robots for hosts seen but unknown (once per host ever).
         # The committed robots table IS the requested set: a host's rules
@@ -647,7 +659,9 @@ class CrawlLoop:
             fetched = table_fetch(scheduled, self.pages, "image_id")
         else:
             fetched = scheduled
-        fetched = fetched.withColumn("batch", F.lit(j)).cache()
+        fetched = materialize(
+            fetched.withColumn("batch", F.lit(j)), "loop-fetched"
+        )
 
         # link extraction + PLD graph update. Redirect targets (3xx
         # Location, possibly RELATIVE — live-HTTP backends surface the
@@ -707,6 +721,8 @@ class CrawlLoop:
                     "keep",
                     *[c for c in flagged.columns if c.startswith("flag_")],
                 )
+            # read by the pld_graph edges and by DRUM
+            prepared = materialize(prepared, "loop-links")
             edges = prepared.select(
                 "src_pld", F.col("pld_hash").alias("dst_pld")
             )
@@ -779,24 +795,6 @@ class CrawlLoop:
                 ids.join(self.pages, "image_id")
             ).withColumn("batch", F.lit(j))
 
-        # ONE driver action for both stats counts (r2 verdict: don't pay
-        # a scheduler roundtrip per number) — the union-agg also
-        # populates the `fetched` and `checked` caches the commit writes
-        # below reuse
-        counts = {
-            r["k"]: r["n"]
-            for r in (
-                fetched.groupBy(F.lit("fetched").alias("k"))
-                .agg(F.count("*").alias("n"))
-                .unionByName(
-                    blocked.groupBy(F.lit("blocked").alias("k")).agg(
-                        F.count("*").alias("n")
-                    )
-                )
-                .collect()
-            )
-        }
-        n_fetched = int(counts.get("fetched", 0))
         metrics = fetched.groupBy(
             F.lit(j).alias("batch"), F.spark_partition_id().alias("partition_id")
         ).agg(
@@ -820,17 +818,16 @@ class CrawlLoop:
             writes["dns_cache"] = TableWrite(dns_delta)
         self.store.commit_batch(j, writes, pre_commit=self._update_bloom)
 
-        stats = {
+        # the stats count materialized frames: no lineage re-runs
+        return {
             "batch": j,
-            "rows_in": rows_in,
-            "fetched": n_fetched,
-            "blocked": int(counts.get("blocked", 0)),
+            "rows_in": frontier.count(),
+            "fetched": fetched.count(),
+            "blocked": checked.filter(
+                F.col("robots_status") == "FAIL"
+            ).count(),
             "done": False,
         }
-        (ranked if ranked is not None else frontier).unpersist()
-        checked.unpersist()
-        fetched.unpersist()
-        return stats
 
     def run(self, n_batches: int, start: int | None = None) -> list[dict]:
         first = (start if start is not None else self.store.last_batch() + 1)

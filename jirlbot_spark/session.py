@@ -168,6 +168,10 @@ def get_spark(
     return spark
 
 
+# The py-files zip this process built, shipped again by later sessions.
+_shipped_zip: str | None = None
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Ship jirlbot_spark to executor Python workers (`--py-files` analog).
 
@@ -175,26 +179,30 @@ def _ship_package(spark: SparkSession) -> None:
     any pandas UDF defined in the package fails to unpickle on workers when
     the job isn't launched from the repo root. On a real cluster the same
     zip goes to `spark-submit --py-files` (see `make dist`).
+
+    The zip is built from the current sources the first time a process
+    ships it, overwriting whatever an earlier process with the same pid
+    left at that path. A failed build raises here, at session start,
+    rather than later in a worker that cannot unpickle a UDF.
     """
-    try:
+    global _shipped_zip
+    if _shipped_zip is None:
         pkg_dir = os.path.dirname(os.path.abspath(__file__))
         zpath = os.path.join(
             tempfile.gettempdir(), f"jirlbot_spark_pyfiles_{os.getpid()}.zip"
         )
-        if not os.path.exists(zpath):
-            with zipfile.ZipFile(zpath, "w") as z:
-                for dirpath, _, files in os.walk(pkg_dir):
-                    for fn in files:
-                        # .py sources plus packaged data files (the
-                        # public-suffix table) — executors read the
-                        # latter via importlib.resources from this zip
-                        if fn.endswith((".py", ".dat")):
-                            full = os.path.join(dirpath, fn)
-                            rel = os.path.join(
-                                "jirlbot_spark",
-                                os.path.relpath(full, pkg_dir),
-                            )
-                            z.write(full, rel)
-        spark.sparkContext.addPyFile(zpath)
-    except Exception:  # never let packaging kill the session
-        pass
+        with zipfile.ZipFile(zpath, "w") as z:
+            for dirpath, _, files in os.walk(pkg_dir):
+                for fn in files:
+                    # .py sources plus packaged data files (the
+                    # public-suffix table) — executors read the
+                    # latter via importlib.resources from this zip
+                    if fn.endswith((".py", ".dat")):
+                        full = os.path.join(dirpath, fn)
+                        rel = os.path.join(
+                            "jirlbot_spark",
+                            os.path.relpath(full, pkg_dir),
+                        )
+                        z.write(full, rel)
+        _shipped_zip = zpath
+    spark.sparkContext.addPyFile(_shipped_zip)

@@ -168,3 +168,51 @@ def test_backpressure_caps_passes_and_drains_burst(spark, tmp_path):
     assert sum(1 for n in fetched if n) >= 3  # the burst really split
     urls = [r.url for r in store.read("fetch_log").select("url").collect()]
     assert len(urls) == len(set(urls)) == 120  # drained exactly once
+
+
+PYTHON_NODES = (
+    "MapInArrow",
+    "MapInPandas",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "FlatMapGroupsInPandas",
+)
+
+
+def test_commit_reads_materialized_lineage(spark, tmp_path, monkeypatch):
+    """Each frame a crawl batch shares is cut once before the commit:
+    no table write re-runs a Python stage (the link prepare is a
+    mapInArrow), and a batch that raises leaves nothing pinned in
+    Spark's cache manager."""
+    real_commit = TableStore.commit_batch
+    captured = {}
+
+    def commit(store, batch_id, writes, pre_commit=None):
+        if batch_id < 2:
+            return real_commit(store, batch_id, writes, pre_commit)
+        captured.update(writes)
+        raise RuntimeError("commit aborted")
+
+    monkeypatch.setattr(TableStore, "commit_batch", commit)
+    spark.catalog.clearCache()  # the session is shared with other tests
+    loop = _mk_loop(
+        spark,
+        str(tmp_path / "cut"),
+        CrawlConfig(
+            url_filter_opts={"blocked_domains": ("spam.net",)},
+            max_urls_per_batch=64,
+        ),
+    )
+    loop.run_batch(1)  # defers every row to fetch robots
+    with pytest.raises(RuntimeError, match="commit aborted"):
+        loop.run_batch(2)
+
+    assert {"frontier", "url_seen", "pld_graph", "fetch_log"} <= set(captured)
+    python_writes = {
+        name: node
+        for name, w in captured.items()
+        for node in PYTHON_NODES
+        if node in w.df._jdf.queryExecution().optimizedPlan().toString()
+    }
+    assert not python_writes, python_writes
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -1,7 +1,7 @@
 """Every lineage cut in the shipped code goes through
 `jirlbot_spark.session.materialize`, so the session's checkpoint
-directory decides, in one place, where materialized frames live.
-Static scan: no Spark session."""
+directory decides, in one place, where materialized frames live; no
+`.cache()` pins a frame beside it. Static scan: no Spark session."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 SESSION = REPO / "jirlbot_spark" / "session.py"
-CUT = re.compile(r"localCheckpoint\(|\.checkpoint\(|scratch_dir")
+CUT = re.compile(r"localCheckpoint\(|\.checkpoint\(|\.cache\(|scratch_dir")
 
 
 def _helper_lines() -> range:

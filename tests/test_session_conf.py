@@ -3,10 +3,19 @@
 Parsing is a pure function (session.parse_env_conf) so the contract is
 testable without a JVM; get_spark applies the parsed dict before
 extra_conf, so programmatic callers always win over the environment.
+The package shipping to executors is tested with a fake SparkContext.
 """
 
 from __future__ import annotations
 
+import os
+import tempfile
+import zipfile
+from types import SimpleNamespace
+
+import pytest
+
+from jirlbot_spark import session
 from jirlbot_spark.session import parse_env_conf
 
 
@@ -34,3 +43,46 @@ def test_parse_drops_incomplete_entries():
 
 def test_parse_empty():
     assert parse_env_conf("") == {}
+
+
+class _RecordingContext:
+    def __init__(self):
+        self.py_files: list[str] = []
+
+    def addPyFile(self, path):
+        self.py_files.append(path)
+
+
+def _fake_spark():
+    return SimpleNamespace(sparkContext=_RecordingContext())
+
+
+def test_ship_package_replaces_a_stale_zip(tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(session, "_shipped_zip", None)
+    stale = tmp_path / f"jirlbot_spark_pyfiles_{os.getpid()}.zip"
+    with zipfile.ZipFile(stale, "w") as z:
+        z.writestr("jirlbot_spark/session.py", "# an older package\n")
+    spark = _fake_spark()
+    session._ship_package(spark)
+    session._ship_package(spark)  # a later session ships the same zip
+    assert spark.sparkContext.py_files == [str(stale)] * 2
+    with zipfile.ZipFile(spark.sparkContext.py_files[0]) as z:
+        shipped = z.read("jirlbot_spark/session.py")
+    with open(session.__file__, "rb") as f:
+        assert shipped == f.read()
+
+
+def test_ship_package_build_error_propagates(tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(session, "_shipped_zip", None)
+
+    def broken_write(self, *a, **kw):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(zipfile.ZipFile, "write", broken_write)
+    spark = _fake_spark()
+    with pytest.raises(OSError, match="disk full"):
+        session._ship_package(spark)
+    assert spark.sparkContext.py_files == []
+    assert session._shipped_zip is None

@@ -543,10 +543,9 @@ def main() -> None:
         F.col("id").alias("url_hash"),
         (F.col("id") % 3).cast("double").alias("priority"),
     )
-    _ranked, th_admitted, _overflow = throttle_frontier(
-        synth_frontier, max_urls=512, num_buckets=32
+    th_plan = capture_plan(
+        throttle_frontier(synth_frontier, max_urls=512, num_buckets=32)
     )
-    th_plan = capture_plan(th_admitted)
     sections.append(
         (
             "Frontier backpressure throttle (max_urls_per_batch)",

@@ -32,9 +32,16 @@ Scale posture (the 100 TB question):
     a straggler round retries from materialized state, not lineage
     (executor-local by default, so a lost executor fails the job; set
     Spark's checkpoint directory to keep rounds on durable storage);
-  - convergence is checked EXACTLY (count equality + anti-join
-    emptiness), not by a hash proxy — a dedup drop-list must not ship
-    on a probabilistic "probably converged".
+  - convergence is checked EXACTLY after every round, not by a hash
+    proxy — a dedup drop-list must not ship on a probabilistic
+    "probably converged". The loop stops at the first STAR FOREST: no
+    node is both a `u` and a `v`, and every `u` has exactly one `v`
+    (one groupBy(node) role count, then `isEmpty`). Small-star output
+    always has v < u and both steps preserve components, so a star
+    forest is rooted at each component's min and is already a fixpoint
+    of the next round: the labels are read off its edges as they are,
+    with no confirming round. Dedup graphs (disjoint pairs, cliques)
+    stop after 1-3 rounds.
 
 No reference counterpart: RovoMe/JIRLbot dedups exact URL keys (DRUM);
 transitive grouping serves the graft's training-data-pipeline set
@@ -118,6 +125,26 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True iff no node of `edges` is both a `u` and a `v`, and every `u`
+    has exactly one `v` (edges are distinct). One aggregate: a node that
+    is a `u` must appear in exactly one edge."""
+    roles = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("u").alias("node"), F.lit(1).alias("is_u")),
+                F.struct(F.col("v").alias("node"), F.lit(0).alias("is_u")),
+            )
+        ).alias("r")
+    ).select("r.*")
+    return (
+        roles.groupBy("node")
+        .agg(F.sum("is_u").alias("n_u"), F.count("*").alias("n"))
+        .where((F.col("n_u") > 0) & (F.col("n") > 1))
+        .isEmpty()
+    )
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
@@ -132,48 +159,44 @@ def connected_components(
     canonical label). Null endpoints and self-loops are dropped. Ids
     must be an orderable type (long, string, ...).
 
-    Raises RuntimeError if the fixpoint is not reached within
+    Each round ends in `session.materialize`, and every frame the result
+    reads (the node set and the labels) comes from materialized edges, so
+    `pairs`' lineage runs exactly once. After each round the edges are
+    checked for a star forest (module docstring); the first one ends the
+    loop, and its edges (u, v) are the labels (id, component) of every
+    non-root id, while roots label themselves.
+
+    Raises RuntimeError if no star forest is reached within
     `max_iterations` alternating rounds — at the proven O(log² n)
     convergence that bound allows graphs far beyond any physical table.
 
     Pass a dict as `stats` to receive {"rounds": n} — dedup-pair graphs
-    (small dense groups) converge in 2-4 rounds; a chain-shaped graph
-    of diameter d takes ~log2(d) (measured: 22 rounds for a 10^6-node
-    path, SCALE.md round-3 addendum).
+    (small dense groups) converge in 1-3 rounds; a chain-shaped graph
+    of diameter d takes ~log2(d) (SCALE.md's round-3 addendum measured
+    22 rounds for a 10^6-node path with a check that compared two
+    consecutive rounds; the star-forest check stops one round sooner).
     """
-    edges = (
+    # cut lineage before iterating; eager so each round's cost is its own
+    edges = materialize(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u").isNotNull() & F.col("v").isNotNull())
         .where(F.col("u") != F.col("v"))
-        .distinct()
+        .distinct(),
+        "cc-edges",
     )
-    nodes = (
-        edges.select(F.explode(F.array("u", "v")).alias("id"))
-        .distinct()
-    )
-    # cut lineage before iterating; eager so each round's cost is its own
-    edges = materialize(edges, "cc-edges")
-    prev, prev_count = None, -1
+    nodes = edges.select(F.explode(F.array("u", "v")).alias("id")).distinct()
     for rounds in range(1, max_iterations + 1):
         edges = materialize(_small_star(_large_star(edges)), "cc-round")
-        count = edges.count()
-        if (
-            prev is not None
-            and count == prev_count
-            and edges.join(prev, ["u", "v"], "left_anti").isEmpty()
-        ):
+        if _is_star_forest(edges):
             if stats is not None:
                 stats["rounds"] = rounds
             break
-        prev, prev_count = edges, count
     else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
             "rounds — pathological input or a broken star step"
         )
-    # fixpoint edges are min-rooted stars: (u, component) for every
-    # non-root u; roots label themselves
-    labels = edges.groupBy("u").agg(F.min("v").alias("component"))
+    labels = edges.select("u", F.col("v").alias("component"))
     return nodes.join(
         labels, nodes["id"] == labels["u"], "left"
     ).select(

@@ -12,16 +12,17 @@ Five dedup strategies over a `documents`-shaped table, each built to hold at
   simhash          — 64-bit SimHash via one Arrow-batched pandas UDF
                      (token hashing + bit accumulation fully vectorized
                      with np.add.reduceat across the batch)
-  ngram_jaccard    — exact n-gram Jaccard pairs within a blocking key
-                     (explode distinct shingles -> self-join -> intersection
-                     counts); the exact-verify stage minhash_lsh reuses
+  exact_jaccard    — exact shingle Jaccard: per candidate pair, the size
+                     of the intersection of the two docs' shingle arrays
+                     (the verify stage of minhash_lsh); without pairs, a
+                     shingle self-join for small inputs and oracles
   embedding_neardup— cosine near-duplicates over an embedding column via
                      random-hyperplane LSH buckets + in-bucket numpy rerank
                      (see similarity.py)
 
-Scale notes: every self-join is blocked (LSH band/bucket or explicit
-blocking key) — no unblocked O(n²) pair enumeration anywhere; shingle
-explosion carries only (key, shingle_hash) longs, not text.
+Scale notes: every self-join on the pipelines' path is blocked (LSH
+band/bucket) — no unblocked O(n²) pair enumeration; shingle explosion
+carries only (key, shingle_hash) longs, not text.
 """
 
 from __future__ import annotations
@@ -313,45 +314,70 @@ def exact_jaccard(
     sh: DataFrame,
     pairs: DataFrame | None = None,
     id_col: str = "doc_id",
-    block_col: str | None = None,
-    docs_blocks: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact shingle Jaccard for candidate pairs (or all within-block pairs
-    when `pairs` is None and a blocking table is given).
+    """Exact shingle Jaccard: (id_a, id_b, inter, sz_a, sz_b, jaccard)
+    with union = sz_a + sz_b - inter, for id_a < id_b. A pair that shares
+    no shingle yields no row.
 
-    intersection = count of shared shingle hashes (self-join on sh);
-    union = |A| + |B| - intersection. All joins are on long keys.
+    `sh` is (id, shingle hash), distinct per doc (`shingle_hashes`).
+    `pairs` are distinct (id_a, id_b) candidates, as `lsh_candidate_pairs`
+    emits; pairs with id_a >= id_b yield no row. With `pairs=None` the
+    candidates are every pair sharing a shingle, from a self-join of `sh`
+    on the shingle hash (quadratic in each shingle's doc count — for
+    small inputs and oracles).
+
+    Each id in a pair gets its shingle array (one `collect_list`), each
+    pair joins both arrays, and `size(array_intersect)` counts the shared
+    shingles: work linear in the two sets per pair, however many other
+    docs share a boilerplate shingle.
     """
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    a = sh.select(F.col(id_col).alias("id_a"), "sh")
-    b = sh.select(F.col(id_col).alias("id_b"), "sh")
-    if pairs is not None:
-        a = a.join(pairs.select("id_a").distinct(), "id_a", "left_semi")
-        b = b.join(pairs.select("id_b").distinct(), "id_b", "left_semi")
-    inter = (
-        a.join(b, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
+    if pairs is None:
+        pairs = (
+            sh.select(F.col(id_col).alias("id_a"), "sh")
+            .join(sh.select(F.col(id_col).alias("id_b"), "sh"), "sh")
+            .select("id_a", "id_b")
+            .distinct()
+        )
+    pairs = pairs.select("id_a", "id_b").where(F.col("id_a") < F.col("id_b"))
+    ids = pairs.select(
+        F.explode(F.array("id_a", "id_b")).alias(id_col)
+    ).distinct()
+    sets = (
+        sh.join(ids, id_col, "left_semi")
+        .groupBy(id_col)
+        .agg(F.collect_list("sh").alias("s"))
     )
-    if pairs is not None:
-        inter = inter.join(pairs, ["id_a", "id_b"], "left_semi")
     out = (
-        inter.join(
-            sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a")),
+        pairs.join(
+            sets.select(F.col(id_col).alias("id_a"), F.col("s").alias("s_a")),
             "id_a",
         )
         .join(
-            sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b")),
+            sets.select(F.col(id_col).alias("id_b"), F.col("s").alias("s_b")),
             "id_b",
         )
-        .withColumn(
-            "jaccard",
-            F.col("inter")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double"),
+        .select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("s_a", "s_b"))
+            .cast("long")
+            .alias("inter"),
+            F.size("s_a").cast("long").alias("sz_a"),
+            F.size("s_b").cast("long").alias("sz_b"),
         )
+        .where(F.col("inter") > 0)
     )
-    return out.select("id_a", "id_b", "inter", "sz_a", "sz_b", "jaccard")
+    return out.select(
+        "id_a",
+        "id_b",
+        "inter",
+        "sz_a",
+        "sz_b",
+        (
+            F.col("inter")
+            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double")
+        ).alias("jaccard"),
+    )
 
 
 def minhash_dedup(
@@ -368,10 +394,11 @@ def minhash_dedup(
     """Full near-dup pipeline: shingle -> minhash -> band -> bucket join ->
     exact-Jaccard verify >= threshold. Returns (id_a, id_b, jaccard).
 
-    The exploded shingle frame feeds four downstream branches (signatures,
-    both jaccard sides, sizes), and the candidate-pair frame three (both
-    semi-join prunes + the final verify semi-join). Both are MATERIALIZED
-    before fan-out — the r2-shipped no-materialization form relied on
+    The verify (`exact_jaccard`) builds one shingle array per doc that
+    is in a candidate pair and intersects the two arrays of each pair.
+    The exploded shingle frame feeds two branches (signatures, the verify's
+    arrays), and the candidate-pair frame two (the ids that get arrays,
+    the pair join). Both are MATERIALIZED before fan-out — the r2-shipped no-materialization form relied on
     "Spark's shuffle-stage reuse dedupes the heavy lifting", which the
     round-3 interleaved A/B (tools/ab_minhash.py, probe-balanced, sf0.1)
     refuted: the semi-join pushdown specializes each branch's exchanges so
@@ -520,9 +547,9 @@ def text_dup_groups(
     survive" — near-dup CLUSTERS are what the published curation
     recipes drop (RefinedWeb/FineWeb keep one representative per
     MinHash cluster, not one per pair). Scale posture inherits from the
-    pieces: banded LSH candidate generation, semi-join-pruned exact
-    verify, O(log) contraction rounds; nothing corpus-sized reaches the
-    driver.
+    pieces: banded LSH candidate generation, a per-pair array-intersect
+    verify, O(log) contraction rounds that read only materialized edges
+    (the verify runs once); nothing corpus-sized reaches the driver.
     """
     from jirlbot_spark.operators.graph import connected_components
 

@@ -18,7 +18,9 @@ a host's rules commit in the same batch that first requests them.
 The writes run as concurrent queries, so each frame several of them
 read is cut once, with session.materialize, where it is built: the
 frontier as read, the robots-checked rows, the fetched rows, the
-prepared links and DRUM's fresh rows.
+prepared links and DRUM's fresh rows. With a checkpoint directory set,
+those cuts are parquet directories; session.release deletes them once
+the batch has committed and counted its stats.
 
 Determinism contract (crawl-order equivalence vs tests/oracle_sim.py):
 ordering is always (priority asc, url_hash asc); priority = discovery
@@ -66,7 +68,7 @@ from jirlbot_spark.operators.star import (
     pld_indegree,
     star_budgets_scalable,
 )
-from jirlbot_spark.session import materialize
+from jirlbot_spark.session import materialize, release
 from jirlbot_spark.sources.storage import TableStore, TableWrite
 
 FRONTIER_SCHEMA = StructType(
@@ -414,7 +416,7 @@ class CrawlLoop:
         prepared = self._prepare_urls(seeds, url_col, None, 0)
         fresh, uniques = self._dedup_new(prepared, batch_id + 1)
         frontier = self.store.read("frontier")
-        return self.store.commit_batch(
+        runs = self.store.commit_batch(
             batch_id,
             {
                 "frontier": TableWrite(
@@ -425,6 +427,8 @@ class CrawlLoop:
             },
             pre_commit=self._update_bloom,
         )
+        release(fresh)
+        return runs
 
     def _update_bloom(self, runs: dict[str, str]) -> None:
         """OR the batch's new url_seen run into the Bloom sidecars. Runs
@@ -489,6 +493,7 @@ class CrawlLoop:
                 frontier = throttle_frontier(frontier, cap, cfg.num_buckets)
             frontier = materialize(frontier, "loop-frontier")
         if frontier is None or not frontier.head(1):
+            release(frontier)
             # with recrawl on, an empty batch is IDLE, not done — pages
             # keep aging toward their next revisit (run() keeps going)
             return {
@@ -540,6 +545,7 @@ class CrawlLoop:
         deferred_robots = checked.filter(
             F.col("robots_status") == "UNKNOWN"
         ).drop("robots_status", "path")
+        bodies = resolved = None
 
         # fetch robots for hosts seen but unknown (once per host ever).
         # The committed robots table IS the requested set: a host's rules
@@ -731,8 +737,7 @@ class CrawlLoop:
                 prepared.drop("src_pld"), j + 1
             )
         else:
-            new_edges = None
-            fresh, uniques = None, None
+            prepared = new_edges = fresh = uniques = None
 
         # assemble frontier_{j+1}: budget-deferred ∪ robots-deferred ∪ new
         cols = [f.name for f in FRONTIER_SCHEMA.fields]
@@ -819,7 +824,7 @@ class CrawlLoop:
         self.store.commit_batch(j, writes, pre_commit=self._update_bloom)
 
         # the stats count materialized frames: no lineage re-runs
-        return {
+        stats = {
             "batch": j,
             "rows_in": frontier.count(),
             "fetched": fetched.count(),
@@ -828,6 +833,8 @@ class CrawlLoop:
             ).count(),
             "done": False,
         }
+        release(frontier, checked, bodies, resolved, fetched, prepared, fresh)
+        return stats
 
     def run(self, n_batches: int, start: int | None = None) -> list[dict]:
         first = (start if start is not None else self.store.last_batch() + 1)

@@ -15,10 +15,12 @@ follows Spark's own checkpoint directory (see its docstring).
 
 from __future__ import annotations
 
+import atexit
 import os
 import tempfile
 import uuid
 import zipfile
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -58,7 +60,7 @@ def materialize(df: DataFrame, tag: str) -> DataFrame:
       set — parquet at `<dir>/materialize/<tag>-<uuid>`, read back.
         Survives executor loss and holds intermediates larger than
         executor storage; costs a write to the shared store. Spark does
-        not remove these directories.
+        not remove these directories; `release` does.
 
     Set the checkpoint directory on runs that must survive executor
     loss. `tag` names the parquet directory only."""
@@ -68,6 +70,35 @@ def materialize(df: DataFrame, tag: str) -> DataFrame:
     path = f"{ckpt}/materialize/{tag}-{uuid.uuid4().hex}"
     df.write.parquet(path)
     return df.sparkSession.read.parquet(path)
+
+
+def release(*frames: DataFrame | None) -> None:
+    """Delete the parquet directories that `frames` (frames returned by
+    `materialize`, or filters and projections of them; None is skipped)
+    read, once nothing will read them again. Only directories directly
+    under `<checkpoint dir>/materialize/` are deleted, through the
+    checkpoint directory's Hadoop filesystem. Without a checkpoint
+    directory this does nothing: executor-local blocks go with their
+    session."""
+    frames = [f for f in frames if f is not None]
+    if not frames:
+        return
+    spark = frames[0].sparkSession
+    ckpt = spark.sparkContext.getCheckpointDir()
+    if ckpt is None:
+        return
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    root = hpath(f"{ckpt}/materialize")
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    root = fs.makeQualified(root).toString()
+    dirs = {
+        fs.makeQualified(hpath(f)).getParent().toString()
+        for df in frames
+        for f in df.inputFiles()
+    }
+    for d in dirs:
+        if d.rsplit("/", 1)[0] == root:
+            fs.delete(hpath(d), True)
 
 
 def _driver_heap() -> str:
@@ -182,8 +213,9 @@ def _ship_package(spark: SparkSession) -> None:
 
     The zip is built from the current sources the first time a process
     ships it, overwriting whatever an earlier process with the same pid
-    left at that path. A failed build raises here, at session start,
-    rather than later in a worker that cannot unpickle a UDF.
+    left at that path, and is deleted when the interpreter exits. A
+    failed build raises here, at session start, rather than later in a
+    worker that cannot unpickle a UDF.
     """
     global _shipped_zip
     if _shipped_zip is None:
@@ -191,6 +223,7 @@ def _ship_package(spark: SparkSession) -> None:
         zpath = os.path.join(
             tempfile.gettempdir(), f"jirlbot_spark_pyfiles_{os.getpid()}.zip"
         )
+        atexit.register(Path(zpath).unlink, missing_ok=True)
         with zipfile.ZipFile(zpath, "w") as z:
             for dirpath, _, files in os.walk(pkg_dir):
                 for fn in files:

@@ -158,14 +158,46 @@ def test_cc_string_ids(spark):
 
 
 def test_cc_iteration_guard(spark):
-    # one round cannot VERIFY convergence (the check compares two
-    # consecutive fixpoints), so the guard must fire rather than ship
-    # an unverified drop-list
+    # one round leaves a 64-node path far from a star forest, so the
+    # guard must fire rather than ship an unverified drop-list
     df = spark.createDataFrame(
-        pd.DataFrame([(1, 2), (2, 3)], columns=["id_a", "id_b"])
+        pd.DataFrame(
+            [(i, i + 1) for i in range(63)], columns=["id_a", "id_b"]
+        ).astype("int64")
     )
     with pytest.raises(RuntimeError):
         connected_components(df, max_iterations=1)
+
+
+def test_cc_dedup_shaped_graph_one_round(spark):
+    # disjoint pairs (either orientation) and cliques: the first round
+    # already yields min-rooted stars, and the check stops there
+    edges = [
+        (a, a + 1) if i % 2 else (a + 1, a)
+        for i, a in enumerate(range(100, 120, 2))
+    ]
+    edges += [(b, a) for i in range(5) for a in range(10 * i, 10 * i + 4)
+              for b in range(a + 1, 10 * i + 4)]
+    stats: dict = {}
+    got = _cc(spark, edges, stats=stats)
+    assert got == _dsu_components([], edges)
+    assert stats["rounds"] == 1
+
+
+def test_cc_reads_only_materialized_edges(spark, tmp_path):
+    # the result is built from materialized edges alone: nothing in its
+    # plan scans the input, so the input's lineage runs exactly once
+    path = str(tmp_path / "pairs")
+    pd.DataFrame(
+        [(1, 2), (2, 3), (7, 8)], columns=["id_a", "id_b"]
+    ).astype("int64").to_parquet(path)
+    pairs = spark.read.parquet(path)
+    assert "parquet" in pairs._jdf.queryExecution().optimizedPlan().toString()
+    out = connected_components(pairs)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "parquet" not in plan, plan
+    got = {r.id: r.component for r in out.collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
 
 
 def test_update_components_equals_batch_recompute(spark):

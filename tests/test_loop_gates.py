@@ -216,3 +216,63 @@ def test_commit_reads_materialized_lineage(spark, tmp_path, monkeypatch):
     }
     assert not python_writes, python_writes
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_durable_batches_delete_their_intermediates(
+    spark, tmp_path, monkeypatch
+):
+    """With a checkpoint directory set, each batch's materialized frames
+    are parquet directories; the batch deletes them once it has
+    committed, and commits the same tables as the executor-local
+    default."""
+    from pyspark import SparkContext
+
+    from jirlbot_spark.session import release
+
+    cfg = CrawlConfig(
+        url_filter_opts={"blocked_domains": ("spam.net",)},
+        max_urls_per_batch=64,
+    )
+
+    def crawl(root):
+        loop = _mk_loop(spark, root, cfg)
+        loop.run(3)
+        tables = {
+            name: sorted(map(tuple, loop.store.read(name).collect()), key=repr)
+            for name in ("frontier", "url_seen", "pld_graph", "fetch_log",
+                         "robots")
+            if loop.store.exists(name)
+        }
+        # metrics rows are per partition, and partitioning is not the
+        # same when a frame is read back from parquet
+        tables["metrics"] = sorted(
+            map(
+                tuple,
+                loop.store.read("metrics")
+                .groupBy("batch")
+                .agg(F.sum("rows_fetched"), F.sum("payload_rows"))
+                .collect(),
+            )
+        )
+        return tables
+
+    local = crawl(str(tmp_path / "local"))
+    ckpt = tmp_path / "ckpt"
+    monkeypatch.setattr(
+        SparkContext, "getCheckpointDir", lambda self: str(ckpt)
+    )
+    durable = crawl(str(tmp_path / "durable"))
+    assert durable == local
+    assert local["fetch_log"]  # the crawl fetched pages
+    # the batches wrote their frames there, and deleted every one
+    assert (ckpt / "materialize").is_dir()
+    assert not [
+        d.name
+        for d in (ckpt / "materialize").iterdir()
+        if d.name.startswith("loop-")
+    ]
+    # nothing outside <checkpoint dir>/materialize is deleted
+    outside = str(tmp_path / "outside")
+    spark.range(3).write.parquet(outside)
+    release(spark.read.parquet(outside))
+    assert spark.read.parquet(outside).count() == 3

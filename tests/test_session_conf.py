@@ -9,6 +9,8 @@ The package shipping to executors is tested with a fake SparkContext.
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 import tempfile
 import zipfile
 from types import SimpleNamespace
@@ -86,3 +88,35 @@ def test_ship_package_build_error_propagates(tmp_path, monkeypatch):
         session._ship_package(spark)
     assert spark.sparkContext.py_files == []
     assert session._shipped_zip is None
+
+
+def test_ship_package_zip_removed_at_exit(tmp_path):
+    # a fresh interpreter ships the package to a fake context, reports
+    # the zip it built and exits: the zip must not outlive it
+    code = (
+        "import os, sys\n"
+        "from types import SimpleNamespace\n"
+        "from jirlbot_spark import session\n"
+        "shipped = []\n"
+        "ctx = SimpleNamespace(addPyFile=shipped.append)\n"
+        "session._ship_package(SimpleNamespace(sparkContext=ctx))\n"
+        "assert shipped and os.path.isfile(shipped[0])\n"
+        "print(shipped[0])\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    env["PYTHONPATH"] = os.pathsep.join(
+        [os.path.dirname(os.path.dirname(session.__file__))]
+        + [p for p in [env.get("PYTHONPATH")] if p]
+    )
+    done = subprocess.run(
+        [sys.executable, "-c", code],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert done.returncode == 0, done.stderr
+    zpath = done.stdout.strip().splitlines()[-1]
+    assert os.path.dirname(zpath) == str(tmp_path)
+    assert not os.path.exists(zpath)
+    assert not list(tmp_path.glob("jirlbot_spark_pyfiles_*.zip"))

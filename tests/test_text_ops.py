@@ -247,7 +247,35 @@ def test_exact_jaccard_values(spark, docs):
     pairs = spark.createDataFrame([(0, 1), (0, 4)], ["id_a", "id_b"])
     out = {(r.id_a, r.id_b): r.jaccard for r in exact_jaccard(sh, pairs).collect()}
     assert out[(0, 1)] == 1.0
-    assert (0, 4) not in out  # zero intersection -> no row (inter join)
+    assert (0, 4) not in out  # zero intersection -> no row
+
+    # pure-Python set-Jaccard oracle over word 3-shingles
+    texts = {r.doc_id: r.text.split() for r in docs.collect()}
+    sets = {
+        d: {tuple(t[i:i + 3]) for i in range(len(t) - 2)}
+        for d, t in texts.items()
+    }
+    cand = [(0, 1), (0, 2), (1, 2), (0, 4), (3, 4), (2, 3), (4, 5)]
+    exp = {}
+    for a, b in cand:
+        inter = len(sets[a] & sets[b])
+        if inter:
+            union = len(sets[a]) + len(sets[b]) - inter
+            exp[(a, b)] = (inter, len(sets[a]), len(sets[b]), inter / union)
+    got = {
+        (r.id_a, r.id_b): (r.inter, r.sz_a, r.sz_b, r.jaccard)
+        for r in exact_jaccard(
+            sh, spark.createDataFrame(cand, ["id_a", "id_b"])
+        ).collect()
+    }
+    assert got == exp
+    assert exp[(0, 2)] == (9, 10, 10, 9 / 11)
+    # the all-pairs self-join path agrees on every pair it shares
+    every = {
+        (r.id_a, r.id_b): (r.inter, r.sz_a, r.sz_b, r.jaccard)
+        for r in exact_jaccard(sh).collect()
+    }
+    assert {k: every[k] for k in exp} == exp
 
 
 def test_simhash_properties(spark, docs):
